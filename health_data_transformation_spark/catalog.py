@@ -4,8 +4,7 @@ append (SURVEY.md §7.0 engine/catalog role).
 Replaces the reference's PostgreSQL tables + per-row INSERT/probe
 round-trips (load_hhs.py:70-145) with:
 - partitioned parquet per table (partition keys in schemas.TABLE_PARTITIONS
-  — date-partitioned facts give partition-pruned queries and make the
-  dedup anti-join probe touch only the incoming batch's partitions)
+  — date-partitioned facts give partition-pruned queries)
 - idempotent append = left-anti join on the natural key then append
   (D4 first-wins upsert; re-delivering a file is a no-op)
 - quarantine sinks for rejected rows (load_hhs.py:152-155 pattern)
@@ -17,9 +16,10 @@ would add multi-writer isolation; out of scope for this store but the
 API is format-agnostic.
 
 100 TB notes: the anti-join's existing side reads ONLY the key columns
-(column pruning) of ONLY the partitions present in the incoming batch
-(partition pruning via the dynamic key-set filter) — so probe cost
-scales with the batch, not the table history.
+(column pruning), but of EVERY partition: a LeftAnti join is not
+eligible for dynamic partition pruning, so the probe's only partition
+filter is ``isnotnull(<partition key>)`` and its cost scales with the
+table history, not the batch.
 """
 
 from __future__ import annotations
@@ -116,9 +116,9 @@ class Warehouse:
     ) -> int:
         """First-wins upsert (D4): insert rows whose key is absent.
 
-        Existing side is pruned to key columns; with a date partition key
-        in ``keys`` the probe scan prunes to the batch's partitions.
-        Returns the number of rows appended.
+        Existing side is pruned to key columns but not to partitions:
+        the LeftAnti probe reads the keys of every partition.  Returns
+        the number of rows appended.
         """
         keys = list(keys or TABLE_KEYS[table])
         if self.exists(table):
@@ -168,17 +168,12 @@ class Warehouse:
             survivors = touched.join(batch.select(*keys), keys, "left_anti")
             # materialize BEFORE overwriting the path being read from
             merged = survivors.unionByName(batch).localCheckpoint()
-            spark = df.sparkSession
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (
-                    merged.write.mode("overwrite")
-                    .partitionBy(*parts)
-                    .parquet(self.path(table))
-                )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            (
+                merged.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(*parts)
+                .parquet(self.path(table))
+            )
         else:
             survivors = existing.join(batch.select(*keys), keys, "left_anti")
             merged = survivors.unionByName(batch).localCheckpoint()
@@ -224,17 +219,12 @@ class Warehouse:
         surviving_parts = {
             tuple(r) for r in survivors.select(*parts).distinct().collect()
         }
-        spark = keys_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                survivors.write.mode("overwrite")
-                .partitionBy(*parts)
-                .parquet(self.path(table))
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            survivors.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*parts)
+            .parquet(self.path(table))
+        )
         # drop partition dirs the delete emptied entirely
         import shutil
 
@@ -244,7 +234,7 @@ class Warehouse:
                 if os.path.isdir(d):
                     shutil.rmtree(d)
         # pre-delete readers hold a stale file listing for this path
-        spark.catalog.refreshByPath(self.path(table))
+        keys_df.sparkSession.catalog.refreshByPath(self.path(table))
         return n
 
     def compact(self, table: str, target_file_mb: int = 128) -> int:

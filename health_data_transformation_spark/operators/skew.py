@@ -211,11 +211,21 @@ def widen_coarse_scan(
 def plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for ``df``'s optimized plan (bytes;
     file-size-derived for scan-rooted frames), or -1 when unavailable.
+
+    A leaf without statistics (e.g. an RDD-backed ``LogicalRDD``)
+    reports ``spark.sql.defaultSizeInBytes``, and every node above it
+    only scales that fallback, so any such leaf also yields -1: a
+    ``min_bytes`` floor then stays narrow, the fail-safe direction.
     Driver-side only — never executes the frame."""
     try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        plan = df._jdf.queryExecution().optimizedPlan()
+        sql_conf = df.sparkSession._jsparkSession.sessionState().conf()
+        fallback = sql_conf.defaultSizeInBytes()
+        leaves = plan.collectLeaves()
+        for i in range(leaves.size()):
+            if int(leaves.apply(i).stats().sizeInBytes()) >= fallback:
+                return -1
+        return int(plan.stats().sizeInBytes())
     except Exception:
         return -1
 

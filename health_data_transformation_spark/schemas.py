@@ -128,3 +128,31 @@ TABLE_KEYS = {
     "hospital_bed_information": ["hospital_fk", "collection_week"],
     "hospital_quality_information": ["facility_id", "data_date"],
 }
+
+# --- testdata tables (TESTDATA.md) ----------------------------------------
+
+#: the ten testdata parquet tables, declared exactly as the files store
+#: them and in file column order.  The date/time columns are INT64
+#: TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark reads as
+#: TIMESTAMP_NTZ.  tests/test_testdata_schemas.py pins these against
+#: the files: a declared read fills a missing column with NULLs instead
+#: of failing, so that test is what catches drift.
+TESTDATA_SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": "c_custkey BIGINT, c_name STRING, c_nationkey INT, "
+    "c_acctbal DOUBLE, c_mktsegment STRING",
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+    "p_size INT, p_retailprice DOUBLE",
+    "orders": "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+    "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING",
+    "lineitem": "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+    "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+    "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, l_linestatus STRING, "
+    "l_shipdate TIMESTAMP_NTZ",
+    "events": "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, "
+    "event_type STRING, value DOUBLE, props STRING",
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}

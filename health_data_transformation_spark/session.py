@@ -7,10 +7,9 @@ Design notes (100 TB target):
   coalesces down.  On a real cluster this would be ~2-3x total cores.
 - Arrow enabled for the (rare) pandas-UDF paths and fast toPandas at the
   display edge.
-- ``nanosAsLong``: the driver testdata writes `events.ts` as parquet
-  INT64 TIMESTAMP(NANOS) which Spark cannot natively read; the legacy
-  conf maps it to LongType and ``sources.tables`` converts to
-  timestamp (truncating to micros exactly like DuckDB does).
+- Session time zone pinned to UTC: ``sources.tables`` casts the stored
+  TIMESTAMP_NTZ ``events.ts`` to TIMESTAMP, which keeps wall-clock
+  values only under UTC.
 """
 
 from __future__ import annotations
@@ -22,8 +21,6 @@ from pyspark.sql import SparkSession
 #: Confs that are safe (and required) to set at *runtime* on any session,
 #: including the driver-owned one handed to ``__spark_entry__`` callables.
 RUNTIME_COMPAT_CONFS = {
-    # read INT64 TIMESTAMP(NANOS) parquet columns as LongType (events.ts)
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # deterministic temporal semantics matching the DuckDB oracle
     "spark.sql.session.timeZone": "UTC",
 }
@@ -80,7 +77,6 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
     )
     for key, value in (extra_confs or {}).items():

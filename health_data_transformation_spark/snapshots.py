@@ -42,8 +42,9 @@ by side and readers take the explicit manifest schema with no
 basePath/partition-discovery coupling.  ``vacuum`` collects at leaf
 granularity: a commit directory whose partitions are partially
 reused by retained versions loses only its unreferenced leaves.
-Readers never list directories: the manifest IS the file listing, so
-planning cost is O(files in snapshot), not O(filesystem).
+Readers never list the table root: ``read`` hands Spark the manifest's
+data directories and Spark lists only those, so planning cost is
+O(directories + files in the snapshot), not O(everything under root).
 """
 
 from __future__ import annotations

@@ -1,15 +1,14 @@
 """Readers for the driver-generated testdata tables (TESTDATA.md).
 
-All reads are plain ``spark.read.parquet`` — schema comes from the files
-(explicit StructTypes are used for the *CSV* ingest paths in
-``sources.csv``; parquet is self-describing and Catalyst prunes columns
-/ pushes filters into the scan automatically).
+Every read declares its schema from ``schemas.TESTDATA_SCHEMAS``, so
+building a frame never runs a schema-inference job; Catalyst still
+prunes columns and pushes filters into the scan.
 
-The one wrinkle: ``events.ts`` is INT64 TIMESTAMP(NANOS) parquet, which
-Spark reads as LongType under ``nanosAsLong`` (see session.py).  We
-convert nanoseconds -> microseconds with integer division (truncation),
-which is byte-identical to how DuckDB ingests the same column — keeping
-the differential oracle exact.
+The date/time columns are stored as INT64 TIMESTAMP(MICROS,
+isAdjustedToUTC=false) and read as TIMESTAMP_NTZ.  ``events.ts`` is
+cast to TIMESTAMP (ltz) for its unix_micros / watermark consumers; with
+the session time zone pinned to UTC (session.py) the cast keeps the
+wall-clock value, exactly as DuckDB reads the column.
 """
 
 from __future__ import annotations
@@ -17,51 +16,27 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..schemas import TESTDATA_SCHEMAS
 from ..session import ensure_compat
 
-TESTDATA_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+TESTDATA_TABLES = list(TESTDATA_SCHEMAS)
 
-#: columns stored as nanosecond timestamps that surface as LongType
-_NANO_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
+
+def read_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One testdata table as stored, read with its declared schema."""
+    return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
+
+
+def events_ts_ltz(df: DataFrame) -> DataFrame:
+    """Cast the stored TIMESTAMP_NTZ ``ts`` column to TIMESTAMP (ltz)."""
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table, normalizing nano-timestamp columns."""
+    """Load one testdata table; ``events.ts`` arrives as TIMESTAMP."""
     ensure_compat(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    dtypes = dict(df.dtypes)
-    for col in _NANO_TS_COLS.get(name, ()):
-        if dtypes.get(col) == "bigint":
-            # integer `div` keeps full 64-bit precision (a double round-trip
-            # would lose sub-microsecond bits at 1.7e18 magnitudes)
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-        elif dtypes.get(col) == "timestamp_ntz":
-            # newer parquet readers surface TIMESTAMP(NANOS) as ntz
-            # (micros-truncated, same as DuckDB); with the session tz
-            # pinned to UTC the ltz cast is wall-clock identical and
-            # restores TIMESTAMP for unix_micros/watermark consumers
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
-    return df
-
-
-def _iso_to_epoch_micros(value: str) -> int:
-    """'YYYY-MM-DD[ HH:MM:SS]' -> microseconds since epoch (UTC, naive)."""
-    import calendar
-    from datetime import datetime
-
-    fmt = "%Y-%m-%d %H:%M:%S" if " " in value else "%Y-%m-%d"
-    return calendar.timegm(datetime.strptime(value, fmt).timetuple()) * 1_000_000
+    df = read_testdata(spark, sf_dir, name)
+    return events_ts_ltz(df) if name == "events" else df
 
 
 def load_events_range(
@@ -72,51 +47,24 @@ def load_events_range(
     lo_inclusive: bool = True,
     hi_inclusive: bool = False,
 ) -> DataFrame:
-    """Events scan with the time-range predicate applied to the RAW
-    nanosecond column, *before* the timestamp conversion.
+    """Events scan with the time-range predicate applied to the STORED
+    TIMESTAMP_NTZ column, *before* the ltz cast.
 
-    The ns->us conversion is a computed column, so a filter written
-    against the converted timestamp cannot reach the parquet scan (only
-    IsNotNull pushes — SCALE.md §2's known wart).  Filtering the stored
-    INT64 directly restores row-group statistics skipping and (at 100 TB)
-    partition pruning.  For whole-microsecond bounds the rewrite is
-    exact: ts_us = ts_ns div 1000 is monotone and the boundary
-    lo_us*1000 is hit exactly, so  ts_ns >= lo_us*1000  <=>
-    ts_us >= lo_us  (same for the strict/<=/</ variants).
-
-    Falls back to post-conversion filtering if the column already
-    arrived as a real timestamp type.
+    A filter written against the cast column cannot reach the parquet
+    scan (only IsNotNull pushes — SCALE.md §2's known wart).  Filtering
+    the stored column keeps row-group statistics skipping and (at
+    100 TB) partition pruning; with the session time zone at UTC the
+    cast is the identity on wall-clock values, so the rows are the same.
     """
     ensure_compat(spark)
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    raw_ts_type = dict(raw.dtypes).get("ts")
-    if raw_ts_type != "bigint":
-        # filter the STORED column (ntz or ltz) so the predicate reaches
-        # the scan, then normalize the type; filtering after the cast
-        # would hide the bound behind a computed column
-        ts = F.col("ts")
-        cast = lambda v: F.lit(v).cast(raw_ts_type)  # noqa: E731
-        conds = []
-        if lo is not None:
-            conds.append(ts >= cast(lo) if lo_inclusive else ts > cast(lo))
-        if hi is not None:
-            conds.append(ts <= cast(hi) if hi_inclusive else ts < cast(hi))
-        for c in conds:
-            raw = raw.filter(c)
-        if raw_ts_type == "timestamp_ntz":
-            raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        return raw
-    ns = F.col("ts")
-    conds = []
+    ts = F.col("ts")
+    bound = lambda v: F.lit(v).cast("timestamp_ntz")  # noqa: E731
+    raw = read_testdata(spark, sf_dir, "events")
     if lo is not None:
-        lo_ns = _iso_to_epoch_micros(lo) * 1000
-        conds.append(ns >= lo_ns if lo_inclusive else ns > lo_ns + 999)
+        raw = raw.filter(ts >= bound(lo) if lo_inclusive else ts > bound(lo))
     if hi is not None:
-        hi_ns = _iso_to_epoch_micros(hi) * 1000
-        conds.append(ns <= hi_ns + 999 if hi_inclusive else ns < hi_ns)
-    for c in conds:
-        raw = raw.filter(c)
-    return raw.withColumn("ts", F.timestamp_micros(F.expr("`ts` div 1000")))
+        raw = raw.filter(ts <= bound(hi) if hi_inclusive else ts < bound(hi))
+    return events_ts_ltz(raw)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

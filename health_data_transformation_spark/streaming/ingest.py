@@ -621,7 +621,7 @@ def stream_stream_interval_join(
     from .windows import narrow_shuffle
 
     # one scan of events, materialized tiny, instead of re-scanning the
-    # parquet (with the nanos-ts conversion) once per staged side
+    # parquet (with the ts cast) once per staged side
     ev = (
         load_events_range(spark, sf_dir, lo=lo, hi=hi)
         .select("event_id", "ts", "user_id", "event_type")
@@ -758,7 +758,7 @@ def stream_stream_left_outer(
     from .windows import narrow_shuffle
 
     # one scan of events, materialized tiny, instead of re-scanning the
-    # parquet (with the nanos-ts conversion) once per staged side
+    # parquet (with the ts cast) once per staged side
     ev = (
         load_events_range(spark, sf_dir, lo=lo, hi=hi)
         .select("event_id", "ts", "user_id", "event_type")
@@ -782,16 +782,14 @@ def stream_stream_left_outer(
     def advancer_clicks(ts: str, eid: int):
         return spark.range(0, 1, 1, 1).select(
             F.lit(eid).cast("long").alias("click_id"),
-            F.lit(ts).cast(dict(clicks.dtypes)["click_ts"]).alias("click_ts"),
+            F.lit(ts).cast("timestamp").alias("click_ts"),
             F.lit(999_999_999).cast("long").alias("cu"),
         )
 
     def advancer_purchases(ts: str, eid: int):
         return spark.range(0, 1, 1, 1).select(
             F.lit(eid).cast("long").alias("purchase_id"),
-            F.lit(ts)
-            .cast(dict(purchases.dtypes)["purchase_ts"])
-            .alias("purchase_ts"),
+            F.lit(ts).cast("timestamp").alias("purchase_ts"),
             F.lit(999_999_999).cast("long").alias("pu"),
         )
 

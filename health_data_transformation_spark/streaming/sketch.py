@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.sketch import count_min_build
 from ..session import ensure_compat
+from ..sources.tables import read_testdata
 from .windows import narrow_shuffle
 
 
@@ -47,7 +48,7 @@ def stream_count_min_cells(
     write-then-swap discipline as Warehouse.compact).
     """
     ensure_compat(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet").select(key_col)
+    static = read_testdata(spark, sf_dir, "events").select(key_col)
 
     stage = tempfile.mkdtemp(prefix="hdt_stream_cms_")
     in_dir = os.path.join(stage, "in")

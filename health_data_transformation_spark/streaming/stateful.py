@@ -14,8 +14,6 @@ order-insensitive and bit-identical to the DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-import tempfile
 import uuid
 from collections.abc import Iterator
 
@@ -24,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..session import ensure_compat
+from .windows import staged_events_stream
 
 STATE_SCHEMA = "n LONG, total_cents LONG"
 OUTPUT_SCHEMA = "user_id LONG, n LONG, total_cents LONG"
@@ -40,13 +39,7 @@ def stateful_user_totals(
     — equal to the batch GROUP BY by construction.
     """
     ensure_compat(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-
-    stage = tempfile.mkdtemp(prefix="hdt_stateful_events_")
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), link)
-    stream = spark.readStream.schema(static.schema).parquet(stage)
+    stream = staged_events_stream(spark, sf_dir, "hdt_stateful_events_")
 
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
     keyed = stream.select("user_id", cents.alias("cents")).groupBy("user_id")
@@ -138,13 +131,7 @@ def tws_user_stats(spark: SparkSession, sf_dir: str, timeout_sec: int = 300) -> 
     )
 
     ensure_compat(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-
-    stage = tempfile.mkdtemp(prefix="hdt_tws_events_")
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), link)
-    stream = spark.readStream.schema(static.schema).parquet(stage)
+    stream = staged_events_stream(spark, sf_dir, "hdt_tws_events_")
 
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
     keyed = stream.select("user_id", cents.alias("cents")).groupBy("user_id")

@@ -21,26 +21,26 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.deterministic import bucket_str, dec_sum
+from ..schemas import TESTDATA_SCHEMAS
 from ..session import ensure_compat
+from ..sources.tables import events_ts_ltz, read_testdata
 
 
-def normalize_event_ts(stream: DataFrame, col: str = "ts") -> DataFrame:
-    """Coerce the event-time column to TIMESTAMP (ltz).
+def staged_events_stream(spark: SparkSession, sf_dir: str, prefix: str) -> DataFrame:
+    """The testdata events file as a parquet file-source stream with
+    ``ts`` as TIMESTAMP (watermarks need ltz, see sources.tables).
 
-    The testdata writes ``events.ts`` as parquet INT64 TIMESTAMP(NANOS),
-    which Spark surfaces either as LongType (``nanosAsLong``) or as
-    TIMESTAMP_NTZ depending on version.  Watermarks require TIMESTAMP
-    proper; with the session timezone pinned to UTC (session.py) the
-    ntz -> ltz cast is value-identical wall-clock time.
+    The file source requires a *directory*, and the testdata is
+    read-only, so a symlink to the file is staged in a fresh temp dir.
     """
-    dtype = dict(stream.dtypes).get(col)
-    if dtype == "bigint":
-        # integer `div` keeps full 64-bit precision (matches DuckDB's
-        # nanos->micros truncation, keeping the differential oracle exact)
-        return stream.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-    if dtype == "timestamp_ntz":
-        return stream.withColumn(col, F.col(col).cast("timestamp"))
-    return stream
+    import os
+    import tempfile
+
+    stage = tempfile.mkdtemp(prefix=prefix)
+    src = os.path.abspath(f"{sf_dir}/events.parquet")
+    os.symlink(src, os.path.join(stage, "events.parquet"))
+    stream = spark.readStream.schema(TESTDATA_SCHEMAS["events"]).parquet(stage)
+    return events_ts_ltz(stream)
 
 
 @contextlib.contextmanager
@@ -68,18 +68,7 @@ def stream_window_counts(
     would be parquet/Delta with append mode + watermark.
     """
     ensure_compat(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # the file-stream source requires a *directory*; stage a symlink dir
-    # (read-only testdata cannot be rearranged)
-    import os
-    import tempfile
-
-    stage = tempfile.mkdtemp(prefix="hdt_stream_events_")
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), link)
-    stream = spark.readStream.schema(static.schema).parquet(stage)
-    stream = normalize_event_ts(stream)
+    stream = staged_events_stream(spark, sf_dir, "hdt_stream_events_")
 
     agg = stream.groupBy(bucket_str("ts", minutes).alias("window_start")).agg(
         F.count("*").alias("n_events"),
@@ -114,17 +103,7 @@ def stream_session_windows(
     per open session per key, merged incrementally.
     """
     ensure_compat(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    import os
-    import tempfile
-    import uuid
-
-    stage = tempfile.mkdtemp(prefix="hdt_stream_sessions_")
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), link)
-    stream = spark.readStream.schema(static.schema).parquet(stage)
-    stream = normalize_event_ts(stream)
+    stream = staged_events_stream(spark, sf_dir, "hdt_stream_sessions_")
 
     agg = (
         stream.groupBy(
@@ -154,20 +133,6 @@ def stream_session_windows(
     return spark.table(name)
 
 
-def _staged_events_stream(spark: SparkSession, sf_dir: str):
-    import os
-    import tempfile
-
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stage = tempfile.mkdtemp(prefix="hdt_stream_ssj_")
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), link)
-    stream = spark.readStream.schema(static.schema).parquet(stage)
-    stream = normalize_event_ts(stream)
-    return stream
-
-
 def stream_stream_join(
     spark: SparkSession, sf_dir: str, window_s: int = 1800, timeout_sec: int = 300
 ) -> DataFrame:
@@ -183,7 +148,7 @@ def stream_stream_join(
     import uuid
 
     purchases = (
-        _staged_events_stream(spark, sf_dir)
+        staged_events_stream(spark, sf_dir, "hdt_stream_ssj_")
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -193,7 +158,7 @@ def stream_stream_join(
         .withWatermark("p_ts", "1 hour")
     )
     clicks = (
-        _staged_events_stream(spark, sf_dir)
+        staged_events_stream(spark, sf_dir, "hdt_stream_ssj_")
         .filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user_id"),
@@ -266,23 +231,21 @@ def stream_dedup_events(
     import uuid
 
     ensure_compat(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-
     stage = tempfile.mkdtemp(prefix="hdt_stream_dedup_")
     src = os.path.abspath(f"{sf_dir}/events.parquet")
     if os.path.isdir(src):
+        static = read_testdata(spark, sf_dir, "events")
         static.write.parquet(os.path.join(stage, "copy1.parquet"))
         static.write.parquet(os.path.join(stage, "copy2.parquet"))
     else:
         os.symlink(src, os.path.join(stage, "copy1.parquet"))
         os.symlink(src, os.path.join(stage, "copy2.parquet"))
 
-    stream = (
-        spark.readStream.schema(static.schema)
+    stream = events_ts_ltz(
+        spark.readStream.schema(TESTDATA_SCHEMAS["events"])
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
-    stream = normalize_event_ts(stream)
     deduped = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
     )

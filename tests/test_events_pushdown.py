@@ -1,6 +1,7 @@
-"""load_events_range: the raw-nanos range filter must (a) reach the
-parquet scan as a pushed filter and (b) select exactly the same rows as
-filtering the converted timestamp column (SCALE.md §2's wart, fixed)."""
+"""load_events_range: the range filter on the stored ts column must
+(a) reach the parquet scan as a pushed filter and (b) select exactly the
+same rows as filtering the converted timestamp column (SCALE.md §2's
+wart, fixed)."""
 
 from __future__ import annotations
 

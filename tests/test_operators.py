@@ -1323,6 +1323,31 @@ def test_widen_coarse_scan_min_bytes_floor(spark, tmp_path):
     )
 
 
+def test_plan_size_bytes_default_size_fallback_is_unavailable(spark, tmp_path):
+    """ADVICE r13: an RDD-backed frame has no statistics — Catalyst
+    reports the spark.sql.defaultSizeInBytes fallback, which a derived
+    projection merely scales.  plan_size_bytes must call both unknown
+    (-1) so the min_bytes floor keeps them narrow, while a file scan
+    keeps its file-derived estimate."""
+    from health_data_transformation_spark.operators.skew import (
+        plan_size_bytes,
+        widen_coarse_scan,
+    )
+
+    rdd_df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(i, "x" * 10) for i in range(8)], 1),
+        "id LONG, text STRING",
+    )
+    assert plan_size_bytes(rdd_df) == -1
+    assert plan_size_bytes(rdd_df.select("id").filter("id > 2")) == -1
+    narrow = widen_coarse_scan(rdd_df, "id", min_bytes=1)
+    assert "Repartition" not in narrow._jdf.queryExecution().optimizedPlan().toString()
+
+    p = str(tmp_path / "t.parquet")
+    spark.range(100).write.parquet(p)
+    assert 0 < plan_size_bytes(spark.read.parquet(p)) < 10**9
+
+
 def test_overlap_actions_order_and_errors(spark):
     """r13: overlap_actions returns results in submission order and
     propagates the first exception — identical failure semantics to

@@ -1012,10 +1012,11 @@ def measure_store_growth(spark) -> None:
     """
     sys.path.insert(0, "/root/repo")
     from health_data_transformation_spark.operators import dedup as D
+    from health_data_transformation_spark.sources.tables import load_table
 
     base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     base = (
-        spark.read.parquet(f"{base_dir}/documents.parquet")
+        load_table(spark, base_dir, "documents")
         .select("doc_id", "text")
         .filter(F.length("text") > 0)
     )
@@ -1167,9 +1168,10 @@ def measure_snapshot_delete(spark) -> None:
 
     sys.path.insert(0, "/root/repo")
     from health_data_transformation_spark.snapshots import SnapshotTable
+    from health_data_transformation_spark.sources.tables import load_table
 
     base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    orders = spark.read.parquet(f"{base_dir}/orders.parquet")
+    orders = load_table(spark, base_dir, "orders")
     base = orders.select(
         F.col("o_orderkey").alias("k"),
         (F.col("o_orderkey") % 16).alias("p"),
@@ -1246,9 +1248,10 @@ def measure_snapshot_delete2(spark) -> None:
 
     sys.path.insert(0, "/root/repo")
     from health_data_transformation_spark.snapshots import SnapshotTable
+    from health_data_transformation_spark.sources.tables import load_table
 
     base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    orders = spark.read.parquet(f"{base_dir}/orders.parquet")
+    orders = load_table(spark, base_dir, "orders")
     base = orders.select(
         F.col("o_orderkey").alias("k"),
         (F.col("o_orderkey") % 4).cast("int").alias("a"),
@@ -1452,9 +1455,10 @@ def measure_ivf_store(spark) -> None:
         ivf_search,
         ivf_search_stored,
     )
+    from health_data_transformation_spark.sources.tables import load_table
 
     base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    base = spark.read.parquet(f"{base_dir}/embeddings.parquet").select(
+    base = load_table(spark, base_dir, "embeddings").select(
         "vec_id", "embedding"
     )
     queries = [

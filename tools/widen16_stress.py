@@ -14,6 +14,7 @@ import os as _os; sys.path.insert(0, _os.path.dirname(_os.path.dirname(_os.path.
 import pyspark.sql.functions as F
 
 from health_data_transformation_spark.session import get_spark
+from health_data_transformation_spark.sources.tables import load_table
 spark = get_spark(app_name="widen16")
 spark.sparkContext.setLogLevel("ERROR")
 
@@ -27,7 +28,7 @@ if not os.path.exists(os.path.join(DST, "documents.parquet")):
         s = os.path.join(SRC, f"{t}.parquet"); d = os.path.join(DST, f"{t}.parquet")
         if not os.path.exists(d):
             os.symlink(s, d)
-    base = spark.read.parquet(os.path.join(SRC, "documents.parquet"))
+    base = load_table(spark, SRC, "documents")
     out = None
     for i in range(REPS):
         c = base.withColumn("doc_id", F.col("doc_id") + F.lit(i * 10_000_000))  # ppm-ok: i is the Python replica index (driver-side int, <=16)
