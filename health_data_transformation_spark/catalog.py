@@ -90,22 +90,10 @@ class Warehouse:
         # partition columns come back at the end; restore declared order
         return df.select(*[f.name for f in TABLE_SCHEMAS[table].fields])
 
-    def append(
-        self, df: DataFrame, table: str, sort_cols: Sequence[str] | None = None
-    ) -> None:
-        """Append rows, partitioned per TABLE_PARTITIONS.
-
-        ``sort_cols``: optional within-partition sort at write time —
-        orders rows inside each parquet file so the file's row-group
-        min/max statistics become selective, and scans with range
-        predicates on those columns skip whole row groups (the poor
-        man's Z-order; pays one local sort per write, no shuffle).
-        """
+    def append(self, df: DataFrame, table: str) -> None:
+        """Append rows, partitioned per TABLE_PARTITIONS."""
         cols = [f.name for f in TABLE_SCHEMAS[table].fields]
-        out = df.select(*cols)
-        if sort_cols:
-            out = out.sortWithinPartitions(*sort_cols)
-        writer = out.write.mode("append")
+        writer = df.select(*cols).write.mode("append")
         parts = TABLE_PARTITIONS.get(table, [])
         if parts:
             writer = writer.partitionBy(*parts)

@@ -58,14 +58,6 @@ def not_null(columns: Sequence[str]) -> list[Rule]:
     return [Rule(name=f"{c}_not_null", predicate=F.col(c).isNotNull()) for c in columns]
 
 
-def in_range(column: str, lo: float, hi: float) -> Rule:
-    return Rule(
-        name=f"{column}_in_range",
-        predicate=F.col(column).between(lo, hi),
-        null_passing_cols=(column,),
-    )
-
-
 def split_valid(df: DataFrame, rules: Sequence[Rule]) -> tuple[DataFrame, DataFrame]:
     """Split into (valid, invalid) by the conjunction of all rules.
 
@@ -127,14 +119,3 @@ def split_valid_cached(
         "invalid_rows": int(counts_row["invalid_rows"] or 0),
     }
     return valid, invalid, flagged, counts
-
-
-def validation_report(valid: DataFrame, invalid: DataFrame) -> dict:
-    """Load-report counts (reference prints these at load_hhs.py:157-161)."""
-    n_valid = valid.count()
-    n_invalid = invalid.count()
-    return {
-        "valid": n_valid,
-        "invalid": n_invalid,
-        "total": n_valid + n_invalid,
-    }

@@ -21,6 +21,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 from ..catalog import Warehouse
 from ..ingest import LoadReport, load_hhs_frame, load_quality_frame
 from ..schemas import CMS_RAW_SCHEMA, HHS_RAW_SCHEMA
+from .bounded import BoundedStream, run_available_now
 
 #: file-source streams require a declared schema; CSV schema matches by
 #: POSITION, so landing files must carry exactly these columns in order
@@ -58,16 +59,13 @@ def stream_load_hhs(
     def process(batch_df, batch_id: int) -> None:
         reports.append(load_hhs_frame(batch_df, warehouse))
 
-    query = (
-        typed.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        spark,
+        typed.writeStream.foreachBatch(process).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        timeout_sec,
     )
-    try:
-        query.awaitTermination(timeout_sec)
-    finally:
-        query.stop()
     return reports
 
 
@@ -102,16 +100,13 @@ def stream_load_quality(
     def process(batch_df, batch_id: int) -> None:
         reports.append(load_quality_frame(batch_df, warehouse))
 
-    query = (
-        stamped.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        spark,
+        stamped.writeStream.foreachBatch(process).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        timeout_sec,
     )
-    try:
-        query.awaitTermination(timeout_sec)
-    finally:
-        query.stop()
     return reports
 
 
@@ -210,8 +205,6 @@ def stream_incremental_dedup(
     end to end).
     """
     import os
-    import tempfile
-    import uuid
 
     import pyspark.sql.functions as F
 
@@ -223,8 +216,8 @@ def stream_incremental_dedup(
     corpus = d.filter(~in_batch)
     batch_docs = d.filter(in_batch)
 
-    stage = tempfile.mkdtemp(prefix="hdt_stream_inc_")
-    out_dir = os.path.join(stage, "_verdicts")
+    run = BoundedStream(spark, "inc")
+    out_dir = run.out("verdicts")
 
     # the corpus's probe-side index, persisted ONCE before any arrival
     # (at 100 TB this is the stored corpus's own ingest-time signature
@@ -240,31 +233,16 @@ def stream_incremental_dedup(
     # ``store_dir`` reuses a store persisted by build_text_store
     # (bench.py's store_split times the build separately — VERDICT r10
     # task #5); default builds it inline, the delivery-cycle shape the
-    # q181 differential gates end to end.
+    # q181 differential gates end to end, as a staged input (the file
+    # source skips its ``_store_*`` dirs) removed with the staging.
     if store_dir is None:
-        store_dir = stage
+        store_dir = run.stage
         build_text_store(spark, sf_dir, store_dir)
     sb = spark.read.parquet(os.path.join(store_dir, "_store_buckets"))
     st = spark.read.parquet(os.path.join(store_dir, "_store_tokens"))
 
-    def stage_file(df, name: str) -> None:
-        # the file stream source lists plain files, not nested dirs:
-        # write a single-part parquet dir, then hoist its part file up
-        # as stage/<name>
-        tmp = os.path.join(stage, "_tmp_" + name)
-        df.coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        os.rename(os.path.join(tmp, part), os.path.join(stage, name))
-
-    stage_file(
-        batch_docs.filter(F.col("doc_id") % 2 == 0), "arrival1.parquet"
-    )
-    stage_file(
-        batch_docs.filter(F.col("doc_id") % 2 == 1), "arrival2.parquet"
-    )
+    run.stage_file(batch_docs.filter(F.col("doc_id") % 2 == 0), "arrival1.parquet")
+    run.stage_file(batch_docs.filter(F.col("doc_id") % 2 == 1), "arrival2.parquet")
 
     def admit(bdf, batch_id: int) -> None:
         # max_bucket defaults to the store's stamped admission cap
@@ -272,11 +250,6 @@ def stream_incremental_dedup(
             sb, st, bdf, band_size=4, num_hashes=8, min_jaccard=0.4,
         ).write.mode("append").parquet(out_dir)
 
-    stream = (
-        spark.readStream.schema(batch_docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
     # NO narrow_shuffle here (r12): this stream is STATELESS (admission
     # consults only the persisted store; foreachBatch has no stateful
     # operator, so there are no per-partition state stores to amortize)
@@ -284,17 +257,11 @@ def stream_incremental_dedup(
     # capping shuffle width to 8 only throttled it to a quarter of the
     # machine.  The stateful streams (windows.py, the interval joins)
     # keep the cap, which is what it exists for.
-    name = f"inc_dedup_{uuid.uuid4().hex[:8]}"
-    query = (
-        stream.writeStream.foreachBatch(admit)
-        .queryName(name)
-        .option(
-            "checkpointLocation", os.path.join(stage, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run.run(
+        run.source(batch_docs.schema, max_files=1)
+        .writeStream.foreachBatch(admit),
+        timeout_sec,
     )
-    query.awaitTermination(timeout_sec)
     return spark.read.parquet(out_dir)
 
 
@@ -334,8 +301,6 @@ def stream_embedding_admission(
     streaming state itself is empty, no watermark needed.
     """
     import os
-    import tempfile
-    import uuid
 
     import pyspark.sql.functions as F
 
@@ -347,29 +312,20 @@ def stream_embedding_admission(
     corpus = e.filter(~in_batch)
     batch_vecs = e.filter(in_batch)
 
-    stage = tempfile.mkdtemp(prefix="hdt_stream_emb_")
-    out_dir = os.path.join(stage, "_verdicts")
+    run = BoundedStream(spark, "emb")
+    out_dir = run.out("verdicts")
 
     # derived corpus-side admission cap, stamped at build time — see
     # stream_incremental_dedup (VERDICT r10 wrong #3); ``store_dir``
     # reuses a build_vector_store persist (bench store_split)
     if store_dir is None:
-        store_dir = stage
+        store_dir = run.stage
         build_vector_store(spark, sf_dir, store_dir)
     sb = spark.read.parquet(os.path.join(store_dir, "_store_buckets"))
     sv = spark.read.parquet(os.path.join(store_dir, "_store_vectors"))
 
-    def stage_file(df, name: str) -> None:
-        tmp = os.path.join(stage, "_tmp_" + name)
-        df.coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        os.rename(os.path.join(tmp, part), os.path.join(stage, name))
-
-    stage_file(batch_vecs.filter(F.col("vec_id") % 2 == 0), "arrival1.parquet")
-    stage_file(batch_vecs.filter(F.col("vec_id") % 2 == 1), "arrival2.parquet")
+    run.stage_file(batch_vecs.filter(F.col("vec_id") % 2 == 0), "arrival1.parquet")
+    run.stage_file(batch_vecs.filter(F.col("vec_id") % 2 == 1), "arrival2.parquet")
 
     def admit(bdf, batch_id: int) -> None:
         # max_bucket defaults to the store's stamped admission cap
@@ -377,25 +333,14 @@ def stream_embedding_admission(
             sb, sv, bdf, min_cosine=0.3,
         ).write.mode("append").parquet(out_dir)
 
-    stream = (
-        spark.readStream.schema(batch_vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
     # stateless admission stream: no narrow_shuffle, same reasoning as
     # stream_incremental_dedup (the exact-cosine verify is CPU-dense
     # and there is no streaming state to amortize)
-    name = f"emb_admission_{uuid.uuid4().hex[:8]}"
-    query = (
-        stream.writeStream.foreachBatch(admit)
-        .queryName(name)
-        .option(
-            "checkpointLocation", os.path.join(stage, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run.run(
+        run.source(batch_vecs.schema, max_files=1)
+        .writeStream.foreachBatch(admit),
+        timeout_sec,
     )
-    query.awaitTermination(timeout_sec)
     return spark.read.parquet(out_dir)
 
 
@@ -421,16 +366,11 @@ def stream_static_enrich(
     the dim is the broadcast side (|event types| rows) and the stream
     never shuffles: each microbatch is a map-side hash probe.
     """
-    import os
-    import tempfile
-    import uuid
-
     import pyspark.sql.functions as F
 
     from ..functions.deterministic import day_str
     from ..functions.text import hex_hash64
     from ..sources.tables import load_events_range
-    from .windows import narrow_shuffle
 
     ev = load_events_range(spark, sf_dir, lo=lo, hi=hi).select(
         "event_id", "ts", "user_id", "event_type"
@@ -444,20 +384,10 @@ def stream_static_enrich(
         (h % 10).cast("int").alias("weight"),
     )
 
-    stage = tempfile.mkdtemp(prefix="hdt_stream_enrich_")
-    out_dir = os.path.join(stage, "_enriched")
-
-    def stage_file(df, name: str) -> None:
-        tmp = os.path.join(stage, "_tmp_" + name)
-        df.coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        os.rename(os.path.join(tmp, part), os.path.join(stage, name))
-
-    stage_file(ev.filter(F.col("event_id") % 2 == 0), "arrival1.parquet")
-    stage_file(ev.filter(F.col("event_id") % 2 == 1), "arrival2.parquet")
+    run = BoundedStream(spark, "enrich")
+    out_dir = run.out("enriched")
+    run.stage_file(ev.filter(F.col("event_id") % 2 == 0), "arrival1.parquet")
+    run.stage_file(ev.filter(F.col("event_id") % 2 == 1), "arrival2.parquet")
 
     def enrich(bdf, batch_id: int) -> None:
         (
@@ -472,23 +402,12 @@ def stream_static_enrich(
             .parquet(out_dir)
         )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    run.run(
+        run.source(ev.schema, max_files=1)
+        .writeStream.foreachBatch(enrich),
+        timeout_sec,
+        state_partitions=8,
     )
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    with narrow_shuffle(spark):
-        query = (
-            stream.writeStream.foreachBatch(enrich)
-            .queryName(name)
-            .option(
-                "checkpointLocation", os.path.join(stage, "_checkpoint")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(timeout_sec)
     return spark.read.parquet(out_dir)
 
 
@@ -514,40 +433,23 @@ def stream_exactly_once_sink(
     At 100 TB this is the foreachBatch exactly-once recipe verbatim:
     (epochId -> partition) + overwrite = retries are free.
     """
-    import os
-    import tempfile
-    import uuid
+    import time as _time
 
     import pyspark.sql.functions as F
 
     from ..sources.tables import load_events_range
-    from .windows import narrow_shuffle
 
     ev = load_events_range(spark, sf_dir, lo=lo, hi=hi).select(
         "event_id", "ts", "user_id", "event_type"
     )
+    arrival1 = ev.filter(F.col("event_id") % 2 == 0)
 
-    stage = tempfile.mkdtemp(prefix="hdt_stream_eos_")
-    out_dir = os.path.join(stage, "_sink")
-
-    def stage_file(df, name: str, mtime: float) -> None:
-        tmp = os.path.join(stage, "_tmp_" + name)
-        df.coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dst = os.path.join(stage, name)
-        os.rename(os.path.join(tmp, part), dst)
-        # pin arrival order (file source orders by mtime): the replay
-        # below assumes arrival1 WAS batch 0
-        os.utime(dst, (mtime, mtime))
-
-    import time as _time
-
+    run = BoundedStream(spark, "eos")
+    out_dir = run.out("sink")
+    # pin arrival order: the replay below assumes arrival1 WAS batch 0
     now = _time.time()
-    stage_file(ev.filter(F.col("event_id") % 2 == 0), "arrival1.parquet", now - 120)
-    stage_file(ev.filter(F.col("event_id") % 2 == 1), "arrival2.parquet", now)
+    run.stage_file(arrival1, "arrival1.parquet", now - 120)
+    run.stage_file(ev.filter(F.col("event_id") % 2 == 1), "arrival2.parquet", now)
 
     def write_batch(bdf, batch_id: int) -> None:
         (
@@ -558,29 +460,16 @@ def stream_exactly_once_sink(
             .parquet(out_dir)
         )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    run.run(
+        run.source(ev.schema, max_files=1)
+        .writeStream.foreachBatch(write_batch),
+        timeout_sec,
+        state_partitions=8,
     )
-    name = f"eos_{uuid.uuid4().hex[:8]}"
-    with narrow_shuffle(spark):
-        query = (
-            stream.writeStream.foreachBatch(write_batch)
-            .queryName(name)
-            .option(
-                "checkpointLocation", os.path.join(stage, "_checkpoint")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(timeout_sec)
 
-    # redelivery: batch 0's file goes through the SAME writer again
-    replay = spark.read.schema(ev.schema).parquet(
-        os.path.join(stage, "arrival1.parquet")
-    )
-    write_batch(replay, 0)
+    # redelivery: batch 0's rows go through the SAME writer again (from
+    # the frame the file was staged from; staging is gone with the run)
+    write_batch(arrival1, 0)
 
     return spark.read.parquet(out_dir)
 
@@ -611,14 +500,9 @@ def stream_stream_interval_join(
     horizon x arrival rate per side, keyed and shuffled on user_id —
     the interval condition prunes within key groups.
     """
-    import os
-    import tempfile
-    import uuid
-
     import pyspark.sql.functions as F
 
     from ..sources.tables import load_events_range
-    from .windows import narrow_shuffle
 
     # one scan of events, materialized tiny, instead of re-scanning the
     # parquet (with the ts cast) once per staged side
@@ -639,53 +523,26 @@ def stream_stream_interval_join(
         F.col("user_id").alias("pu"),
     )
 
-    stage = tempfile.mkdtemp(prefix="hdt_stream_ssj_")
-    cdir = os.path.join(stage, "clicks")
-    pdir = os.path.join(stage, "purchases")
-    out_dir = os.path.join(stage, "_joined")
-    os.makedirs(cdir)
-    os.makedirs(pdir)
-
-    def stage_file(df, dirname: str, name: str, mtime: int) -> None:
-        tmp = os.path.join(stage, "_tmp_" + name)
-        df.coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dest = os.path.join(dirname, name)
-        os.rename(os.path.join(tmp, part), dest)
-        os.utime(dest, (mtime, mtime))
-
+    run = BoundedStream(spark, "ssj")
     base = 1_700_000_000
-    stage_file(
-        clicks.filter(F.col("click_id") % 2 == 0), cdir,
-        "c1.parquet", base,
+    run.stage_file(clicks.filter(F.col("click_id") % 2 == 0), "clicks/c1.parquet", base)
+    run.stage_file(
+        clicks.filter(F.col("click_id") % 2 == 1), "clicks/c2.parquet", base + 10
     )
-    stage_file(
-        clicks.filter(F.col("click_id") % 2 == 1), cdir,
-        "c2.parquet", base + 10,
+    run.stage_file(
+        purchases.filter(F.col("purchase_id") % 2 == 0), "purchases/p1.parquet", base
     )
-    stage_file(
-        purchases.filter(F.col("purchase_id") % 2 == 0), pdir,
-        "p1.parquet", base,
-    )
-    stage_file(
-        purchases.filter(F.col("purchase_id") % 2 == 1), pdir,
-        "p2.parquet", base + 10,
+    run.stage_file(
+        purchases.filter(F.col("purchase_id") % 2 == 1),
+        "purchases/p2.parquet",
+        base + 10,
     )
 
-    cs = (
-        spark.readStream.schema(clicks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(cdir)
-        .withWatermark("click_ts", "30 days")
+    cs = run.source(clicks.schema, "clicks", max_files=1).withWatermark(
+        "click_ts", "30 days"
     )
-    ps = (
-        spark.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(pdir)
-        .withWatermark("purchase_ts", "30 days")
+    ps = run.source(purchases.schema, "purchases", max_files=1).withWatermark(
+        "purchase_ts", "30 days"
     )
     joined = cs.join(
         ps,
@@ -696,22 +553,8 @@ def stream_stream_interval_join(
             <= F.col("click_ts") + F.expr("INTERVAL 2 HOURS")
         ),
     ).select("cu", "click_id", "click_ts", "purchase_id", "purchase_ts")
-
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    with narrow_shuffle(spark, 2):
-        query = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option(
-                "checkpointLocation", os.path.join(stage, "_checkpoint")
-            )
-            .outputMode("append")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(timeout_sec)
-    return spark.read.parquet(out_dir)
+    # join state on 2 shuffle partitions
+    return run.to_parquet(joined, timeout_sec, state_partitions=2)
 
 
 def stream_stream_left_outer(
@@ -748,14 +591,9 @@ def stream_stream_left_outer(
     role is played by live traffic; the explicit staging here is what
     makes the semantics testable.
     """
-    import os
-    import tempfile
-    import uuid
-
     import pyspark.sql.functions as F
 
     from ..sources.tables import load_events_range
-    from .windows import narrow_shuffle
 
     # one scan of events, materialized tiny, instead of re-scanning the
     # parquet (with the ts cast) once per staged side
@@ -793,55 +631,28 @@ def stream_stream_left_outer(
             F.lit(999_999_999).cast("long").alias("pu"),
         )
 
-    stage = tempfile.mkdtemp(prefix="hdt_stream_sslo_")
-    cdir = os.path.join(stage, "clicks")
-    pdir = os.path.join(stage, "purchases")
-    out_dir = os.path.join(stage, "_joined")
-    os.makedirs(cdir)
-    os.makedirs(pdir)
-
-    def stage_file(df, dirname: str, name: str, mtime: int) -> None:
-        tmp = os.path.join(stage, "_tmp_" + name)
-        df.coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dest = os.path.join(dirname, name)
-        os.rename(os.path.join(tmp, part), dest)
-        os.utime(dest, (mtime, mtime))
-
+    run = BoundedStream(spark, "sslo")
     base = 1_700_000_000
-    stage_file(clicks, cdir, "c1.parquet", base)
-    stage_file(
-        advancer_clicks("2024-06-01 00:00:00", -1), cdir,
-        "c2.parquet", base + 10,
+    run.stage_file(clicks, "clicks/c1.parquet", base)
+    run.stage_file(
+        advancer_clicks("2024-06-01 00:00:00", -1), "clicks/c2.parquet", base + 10
     )
-    stage_file(
-        advancer_clicks("2024-06-10 00:00:00", -2), cdir,
-        "c3.parquet", base + 20,
+    run.stage_file(
+        advancer_clicks("2024-06-10 00:00:00", -2), "clicks/c3.parquet", base + 20
     )
-    stage_file(purchases, pdir, "p1.parquet", base)
-    stage_file(
-        advancer_purchases("2024-06-01 00:00:00", -1), pdir,
-        "p2.parquet", base + 10,
+    run.stage_file(purchases, "purchases/p1.parquet", base)
+    run.stage_file(
+        advancer_purchases("2024-06-01 00:00:00", -1), "purchases/p2.parquet", base + 10
     )
-    stage_file(
-        advancer_purchases("2024-06-10 00:00:00", -2), pdir,
-        "p3.parquet", base + 20,
+    run.stage_file(
+        advancer_purchases("2024-06-10 00:00:00", -2), "purchases/p3.parquet", base + 20
     )
 
-    cs = (
-        spark.readStream.schema(clicks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(cdir)
-        .withWatermark("click_ts", "1 hour")
+    cs = run.source(clicks.schema, "clicks", max_files=1).withWatermark(
+        "click_ts", "1 hour"
     )
-    ps = (
-        spark.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(pdir)
-        .withWatermark("purchase_ts", "1 hour")
+    ps = run.source(purchases.schema, "purchases", max_files=1).withWatermark(
+        "purchase_ts", "1 hour"
     )
     joined = cs.join(
         ps,
@@ -853,19 +664,5 @@ def stream_stream_left_outer(
         ),
         "left_outer",
     ).select("cu", "click_id", "click_ts", "purchase_id", "purchase_ts")
-
-    name = f"sslo_{uuid.uuid4().hex[:8]}"
-    with narrow_shuffle(spark, 2):
-        query = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option(
-                "checkpointLocation", os.path.join(stage, "_checkpoint")
-            )
-            .outputMode("append")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(timeout_sec)
-    return spark.read.parquet(out_dir).filter(F.col("cu") != 999_999_999)
+    out = run.to_parquet(joined, timeout_sec, state_partitions=2)
+    return out.filter(F.col("cu") != 999_999_999)

@@ -16,17 +16,13 @@ DuckDB oracle verifies the *streaming* path.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.sketch import count_min_build
 from ..session import ensure_compat
 from ..sources.tables import read_testdata
-from .windows import narrow_shuffle
+from .bounded import BoundedStream
 
 
 def stream_count_min_cells(
@@ -50,11 +46,10 @@ def stream_count_min_cells(
     ensure_compat(spark)
     static = read_testdata(spark, sf_dir, "events").select(key_col)
 
-    stage = tempfile.mkdtemp(prefix="hdt_stream_cms_")
-    in_dir = os.path.join(stage, "in")
+    run = BoundedStream(spark, "cms")
     # split into n_chunks files so AvailableNow + maxFilesPerTrigger=1
     # yields a real multi-batch run
-    static.repartition(n_chunks).write.mode("overwrite").parquet(in_dir)
+    static.repartition(n_chunks).write.parquet(run.stage)
 
     state: dict[str, DataFrame | None] = {"cells": None}
 
@@ -69,26 +64,15 @@ def stream_count_min_cells(
                 .groupBy("row", "bucket")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-        out = os.path.join(stage, f"cells_v{batch_id}")
+        out = run.out(f"cells_v{batch_id}")
         merged.write.mode("overwrite").parquet(out)
         state["cells"] = batch_df.sparkSession.read.parquet(out)
 
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    run.run(
+        run.source(static.schema, max_files=1)
+        .writeStream.foreachBatch(merge_batch),
+        timeout_sec,
+        state_partitions=8,
     )
-    with narrow_shuffle(spark):
-        query = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", os.path.join(stage, "ckpt"))
-            .queryName(f"cms_{uuid.uuid4().hex[:8]}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            query.awaitTermination(timeout_sec)
-        finally:
-            query.stop()
     assert state["cells"] is not None, "stream produced no batches"
     return state["cells"]

@@ -14,7 +14,6 @@ order-insensitive and bit-identical to the DuckDB oracle.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pyspark.sql.functions as F
@@ -22,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..session import ensure_compat
+from .bounded import BoundedStream
 from .windows import staged_events_stream
 
 STATE_SCHEMA = "n LONG, total_cents LONG"
@@ -39,7 +39,8 @@ def stateful_user_totals(
     — equal to the batch GROUP BY by construction.
     """
     ensure_compat(spark)
-    stream = staged_events_stream(spark, sf_dir, "hdt_stateful_events_")
+    run = BoundedStream(spark, "stateful")
+    stream = staged_events_stream(run, sf_dir)
 
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
     keyed = stream.select("user_id", cents.alias("cents")).groupBy("user_id")
@@ -62,31 +63,17 @@ def stateful_user_totals(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    name = f"stateful_{uuid.uuid4().hex[:8]}"
     # each shuffle partition materializes a state-store instance; for a
-    # bounded keyed-state run the per-store fixed cost dominates, so run
-    # the stateful stage narrow (key count here is small; a production
+    # bounded keyed-state run the per-store fixed cost dominates, so the
+    # memory-sink run is narrow (key count here is small; a production
     # stream sizes this to keys x state-size / executor memory)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            query.awaitTermination(timeout_sec)
-        finally:
-            query.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    # update mode appends one row per (key, trigger); keep the last emit
-    # per key (single AvailableNow trigger => already unique, but stay
-    # robust to multi-batch file splits)
-    memo = spark.table(name)
+    return _last_emit(run.to_memory(out, "update", timeout_sec))
+
+
+def _last_emit(memo: DataFrame) -> DataFrame:
+    """Update mode appends one row per (key, trigger); keep the last
+    emit per key (single AvailableNow trigger => already unique, but
+    stay robust to multi-batch file splits)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n").desc())
@@ -131,7 +118,8 @@ def tws_user_stats(spark: SparkSession, sf_dir: str, timeout_sec: int = 300) -> 
     )
 
     ensure_compat(spark)
-    stream = staged_events_stream(spark, sf_dir, "hdt_tws_events_")
+    run = BoundedStream(spark, "tws")
+    stream = staged_events_stream(run, sf_dir)
 
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
     keyed = stream.select("user_id", cents.alias("cents")).groupBy("user_id")
@@ -160,44 +148,21 @@ def tws_user_stats(spark: SparkSession, sf_dir: str, timeout_sec: int = 300) -> 
         timeMode="None",
     )
 
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_provider = spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass", None
     )
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     # transformWithState requires the RocksDB state store provider
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        query = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            query.awaitTermination(timeout_sec)
-        finally:
-            query.stop()
+        memo = run.to_memory(out, "update", timeout_sec)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if prev_provider is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
             spark.conf.set(
                 "spark.sql.streaming.stateStore.providerClass", prev_provider
             )
-
-    memo = spark.table(name)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n").desc())
-    return (
-        memo.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk")
-    )
+    return _last_emit(memo)

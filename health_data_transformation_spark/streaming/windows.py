@@ -14,8 +14,7 @@ the streaming plan computes the same aggregation.
 
 from __future__ import annotations
 
-import contextlib
-import uuid
+import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -23,39 +22,20 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.deterministic import bucket_str, dec_sum
 from ..schemas import TESTDATA_SCHEMAS
 from ..session import ensure_compat
-from ..sources.tables import events_ts_ltz, read_testdata
+from ..sources.tables import events_ts_ltz
+from .bounded import BoundedStream
 
 
-def staged_events_stream(spark: SparkSession, sf_dir: str, prefix: str) -> DataFrame:
+def staged_events_stream(run: BoundedStream, sf_dir: str, sub: str = "") -> DataFrame:
     """The testdata events file as a parquet file-source stream with
     ``ts`` as TIMESTAMP (watermarks need ltz, see sources.tables).
 
     The file source requires a *directory*, and the testdata is
-    read-only, so a symlink to the file is staged in a fresh temp dir.
+    read-only, so a symlink to the file is staged in ``run``'s staging
+    dir (under ``sub``).
     """
-    import os
-    import tempfile
-
-    stage = tempfile.mkdtemp(prefix=prefix)
-    src = os.path.abspath(f"{sf_dir}/events.parquet")
-    os.symlink(src, os.path.join(stage, "events.parquet"))
-    stream = spark.readStream.schema(TESTDATA_SCHEMAS["events"]).parquet(stage)
-    return events_ts_ltz(stream)
-
-
-@contextlib.contextmanager
-def narrow_shuffle(spark: SparkSession, n: int = 8):
-    """Bounded-run stateful streaming allocates one state store per
-    shuffle partition per stateful operator per microbatch; at local
-    test scale that fixed cost dominates, so stateful streaming runs
-    here use ``n`` partitions (production sizes this to key
-    cardinality)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run.link(f"{sf_dir}/events.parquet", os.path.join(sub, "events.parquet"))
+    return events_ts_ltz(run.source(TESTDATA_SCHEMAS["events"], sub))
 
 
 def stream_window_counts(
@@ -68,27 +48,14 @@ def stream_window_counts(
     would be parquet/Delta with append mode + watermark.
     """
     ensure_compat(spark)
-    stream = staged_events_stream(spark, sf_dir, "hdt_stream_events_")
+    run = BoundedStream(spark, "events")
+    stream = staged_events_stream(run, sf_dir)
 
     agg = stream.groupBy(bucket_str("ts", minutes).alias("window_start")).agg(
         F.count("*").alias("n_events"),
         dec_sum("value", 2).alias("total_value"),
     )
-
-    name = f"stream_win_{uuid.uuid4().hex[:8]}"
-    with narrow_shuffle(spark):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            query.awaitTermination(timeout_sec)
-        finally:
-            query.stop()
-    return spark.table(name)
+    return run.to_memory(agg, "complete", timeout_sec)
 
 
 def stream_session_windows(
@@ -103,7 +70,8 @@ def stream_session_windows(
     per open session per key, merged incrementally.
     """
     ensure_compat(spark)
-    stream = staged_events_stream(spark, sf_dir, "hdt_stream_sessions_")
+    run = BoundedStream(spark, "sessions")
+    stream = staged_events_stream(run, sf_dir)
 
     agg = (
         stream.groupBy(
@@ -116,21 +84,7 @@ def stream_session_windows(
             "n_events",
         )
     )
-
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    with narrow_shuffle(spark):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            query.awaitTermination(timeout_sec)
-        finally:
-            query.stop()
-    return spark.table(name)
+    return run.to_memory(agg, "complete", timeout_sec)
 
 
 def stream_stream_join(
@@ -145,10 +99,9 @@ def stream_stream_join(
     bound.  Batch twin: operators/rangejoin.py (same predicate).
     """
     ensure_compat(spark)
-    import uuid
-
+    run = BoundedStream(spark, "ssj")
     purchases = (
-        staged_events_stream(spark, sf_dir, "hdt_stream_ssj_")
+        staged_events_stream(run, sf_dir, "purchases")
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -158,7 +111,7 @@ def stream_stream_join(
         .withWatermark("p_ts", "1 hour")
     )
     clicks = (
-        staged_events_stream(spark, sf_dir, "hdt_stream_ssj_")
+        staged_events_stream(run, sf_dir, "clicks")
         .filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user_id"),
@@ -174,21 +127,7 @@ def stream_stream_join(
         & (F.col("c_ts") < F.col("p_ts")),
         "inner",
     ).select("purchase_id", "user_id", "click_id")
-
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    with narrow_shuffle(spark):
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            query.awaitTermination(timeout_sec)
-        finally:
-            query.stop()
-    return spark.table(name)
+    return run.to_memory(joined, "append", timeout_sec)
 
 
 def stream_dedup_ingest(
@@ -226,44 +165,15 @@ def stream_dedup_events(
     distinct-by-key table, which is the oracle; state is
     O(keys within watermark), not O(history).
     """
-    import os
-    import tempfile
-    import uuid
-
     ensure_compat(spark)
-    stage = tempfile.mkdtemp(prefix="hdt_stream_dedup_")
-    src = os.path.abspath(f"{sf_dir}/events.parquet")
-    if os.path.isdir(src):
-        static = read_testdata(spark, sf_dir, "events")
-        static.write.parquet(os.path.join(stage, "copy1.parquet"))
-        static.write.parquet(os.path.join(stage, "copy2.parquet"))
-    else:
-        os.symlink(src, os.path.join(stage, "copy1.parquet"))
-        os.symlink(src, os.path.join(stage, "copy2.parquet"))
-
-    stream = events_ts_ltz(
-        spark.readStream.schema(TESTDATA_SCHEMAS["events"])
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    run = BoundedStream(spark, "dedup")
+    for name in ("copy1.parquet", "copy2.parquet"):
+        run.link(f"{sf_dir}/events.parquet", name)
+    stream = events_ts_ltz(run.source(TESTDATA_SCHEMAS["events"], max_files=1))
     deduped = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    with narrow_shuffle(spark):
-        query = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            query.awaitTermination(timeout_sec)
-        finally:
-            query.stop()
-    return spark.table(name)
+    return run.to_memory(deduped, "append", timeout_sec)
 
 
 def stream_late_data_drop(
@@ -304,8 +214,6 @@ def stream_late_data_drop(
     state O(windows in SLA), not O(history).
     """
     ensure_compat(spark)
-    import os
-    import tempfile
     import time as _time
 
     from ..sources.tables import load_events_range
@@ -322,32 +230,15 @@ def stream_late_data_drop(
         .withColumn("ts", F.col("ts") - F.expr("INTERVAL 6 HOURS"))
     )
 
-    stage = tempfile.mkdtemp(prefix="hdt_stream_late_")
-    out_dir = os.path.join(stage, "_windows")
-
-    def stage_file(df, name: str, mtime: float) -> None:
-        tmp = os.path.join(stage, "_tmp_" + name)
-        df.coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dst = os.path.join(stage, name)
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
+    run = BoundedStream(spark, "late")
     now = _time.time()
-    stage_file(arrival1, "arrival1.parquet", now - 240)
-    stage_file(arrival2, "arrival2.parquet", now - 120)
-    stage_file(arrival3, "arrival3.parquet", now)
+    run.stage_file(arrival1, "arrival1.parquet", now - 240)
+    run.stage_file(arrival2, "arrival2.parquet", now - 120)
+    run.stage_file(arrival3, "arrival3.parquet", now)
 
-    stream = (
-        spark.readStream.schema(arrival1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
     agg = (
-        stream.withWatermark("ts", "2 hours")
+        run.source(arrival1.schema, max_files=1)
+        .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(
             F.count("*").alias("n_events"),
@@ -361,18 +252,4 @@ def stream_late_data_drop(
             F.col("user_mod_sum").cast("long").alias("user_mod_sum"),
         )
     )
-    name = f"late_drop_{uuid.uuid4().hex[:8]}"
-    with narrow_shuffle(spark):
-        query = (
-            agg.writeStream.format("parquet")
-            .queryName(name)
-            .outputMode("append")
-            .option("path", out_dir)
-            .option(
-                "checkpointLocation", os.path.join(stage, "_checkpoint")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(timeout_sec)
-    return spark.read.parquet(out_dir)
+    return run.to_parquet(agg, timeout_sec)

@@ -1,0 +1,100 @@
+"""Source-level guards over the package (no JVM): one runner for the
+bounded streams, one owner for temp dirs, one place that narrows the
+shuffle.
+
+- ``awaitTermination`` is called only in
+  ``streaming.bounded.run_available_now``, which checks its result and
+  always stops the query.
+- ``tempfile`` is imported only by ``scratch``, so every temp dir lives
+  under the per-process root that is removed at exit.
+- ``spark.sql.shuffle.partitions`` is set at runtime only in
+  ``streaming.bounded.narrow_shuffle``.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+PKG = Path(__file__).resolve().parents[1] / "health_data_transformation_spark"
+
+
+def _modules():
+    for path in sorted(PKG.rglob("*.py")):
+        yield path.relative_to(PKG).as_posix(), ast.parse(path.read_text())
+
+
+def _enclosing_functions(tree: ast.AST) -> dict[ast.AST, str]:
+    """node -> name of the innermost function that contains it."""
+    owner: dict[ast.AST, str] = {}
+
+    def visit(node: ast.AST, fn: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            name = (
+                child.name
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+                else fn
+            )
+            owner[child] = name
+            visit(child, name)
+
+    visit(tree, "<module>")
+    return owner
+
+
+def _sites(predicate) -> list[tuple[str, str, int]]:
+    """(module, enclosing function, line) of every node matching."""
+    found = []
+    for mod, tree in _modules():
+        owner = _enclosing_functions(tree)
+        for node in ast.walk(tree):
+            if predicate(node):
+                found.append((mod, owner.get(node, "<module>"), node.lineno))
+    return found
+
+
+def test_await_termination_only_in_the_runner():
+    sites = _sites(
+        lambda n: isinstance(n, ast.Attribute) and n.attr == "awaitTermination"
+    )
+    assert [(m, f) for m, f, _ in sites] == [
+        ("streaming/bounded.py", "run_available_now")
+    ], sites
+
+
+def test_tempfile_only_in_the_scratch_helper():
+    def imports_tempfile(n: ast.AST) -> bool:
+        if isinstance(n, ast.Import):
+            return any(a.name == "tempfile" for a in n.names)
+        return isinstance(n, ast.ImportFrom) and n.module == "tempfile"
+
+    sites = _sites(imports_tempfile)
+    assert {m for m, _, _ in sites} == {"scratch.py"}, sites
+
+
+def test_shuffle_partitions_set_only_in_narrow_shuffle():
+    def sets_shuffle_partitions(n: ast.AST) -> bool:
+        if not (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "set"
+            and n.args
+        ):
+            return False
+        key = n.args[0]
+        return (
+            isinstance(key, ast.Constant)
+            and key.value == "spark.sql.shuffle.partitions"
+        )
+
+    def sql_sets_it(n: ast.AST) -> bool:
+        return (
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and "SET SPARK.SQL.SHUFFLE.PARTITIONS" in n.value.upper()
+        )
+
+    sites = _sites(sets_shuffle_partitions) + _sites(sql_sets_it)
+    assert {(m, f) for m, f, _ in sites} == {
+        ("streaming/bounded.py", "narrow_shuffle")
+    }, sites
