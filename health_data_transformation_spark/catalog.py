@@ -9,11 +9,19 @@ round-trips (load_hhs.py:70-145) with:
   (D4 first-wins upsert; re-delivering a file is a no-op)
 - quarantine sinks for rejected rows (load_hhs.py:152-155 pattern)
 
-Atomicity: one append = one Spark job writing through the parquet
-committer (task/job commit protocol), matching the reference's
-per-file transaction (load_hhs.py:148).  A Delta/Iceberg table format
-would add multi-writer isolation; out of scope for this store but the
-API is format-agnostic.
+One pass per append: the anti-join, the in-batch dedup and the row
+count run in the write's own execution (the count is an observation on
+the written frame), so nothing is executed twice.  A write that adds no
+rows adds no file: the schema-only part file Spark leaves on a flat
+table, or the dir of a table that did not exist, is removed again
+(single writer, as ``compact`` assumes).
+
+Atomicity: each append writes through the parquet committer
+(task/job commit protocol), like the reference's per-file transaction
+(load_hhs.py:148), but a crash during job commit can leave part of an
+append visible.  A Delta/Iceberg table format would add atomic commits
+and multi-writer isolation; out of scope for this store but the API is
+format-agnostic.
 
 100 TB notes: the anti-join's existing side reads ONLY the key columns
 (column pruning), but of EVERY partition: a LeftAnti join is not
@@ -25,10 +33,11 @@ table history, not the batch.
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .schemas import TABLE_KEYS, TABLE_PARTITIONS, TABLE_SCHEMAS
 
@@ -90,25 +99,18 @@ class Warehouse:
         # partition columns come back at the end; restore declared order
         return df.select(*[f.name for f in TABLE_SCHEMAS[table].fields])
 
-    def append(self, df: DataFrame, table: str) -> None:
-        """Append rows, partitioned per TABLE_PARTITIONS."""
-        cols = [f.name for f in TABLE_SCHEMAS[table].fields]
-        writer = df.select(*cols).write.mode("append")
-        parts = TABLE_PARTITIONS.get(table, [])
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(self.path(table))
-
     def append_idempotent(
         self, df: DataFrame, table: str, keys: Sequence[str] | None = None
     ) -> int:
-        """First-wins upsert (D4): insert rows whose key is absent.
+        """First-wins upsert (D4): append the rows whose key is absent,
+        partitioned per TABLE_PARTITIONS.
 
         Existing side is pruned to key columns but not to partitions:
         the LeftAnti probe reads the keys of every partition.  Returns
-        the number of rows appended.
+        the number of rows appended, observed on the write itself.
         """
         keys = list(keys or TABLE_KEYS[table])
+        path = self.path(table)
         if self.exists(table):
             existing = self.read(table).select(*keys)
             fresh = df.join(existing, keys, "left_anti")
@@ -118,54 +120,25 @@ class Warehouse:
             # RDD scan, not a LocalRelation) — skip the join outright
             fresh = df
         # one deterministic winner per key *within* the batch as well
-        fresh = fresh.dropDuplicates(keys)
-        n = fresh.count()
-        if n:
-            self.append(fresh, table)
-        return n
-
-    def upsert_last_wins(
-        self, df: DataFrame, table: str, keys: Sequence[str] | None = None
-    ) -> int:
-        """MERGE-style upsert: incoming rows REPLACE existing rows with
-        the same key (the complement of append_idempotent's first-wins).
-
-        Emulated without a table format: for a partitioned table, only
-        the partitions present in the batch are rewritten (anti-join of
-        the old partition contents against the batch keys, union the
-        batch, dynamic partition overwrite) — cost scales with the batch
-        partitions, not table history.  Unpartitioned tables rewrite
-        whole (they are dimension-sized by design).  Returns batch rows
-        applied.
-        """
-        keys = list(keys or TABLE_KEYS[table])
-        cols = [f.name for f in TABLE_SCHEMAS[table].fields]
-        batch = df.select(*cols).dropDuplicates(keys)
-        n = batch.count()
-        if not n:
-            return 0
-        if not self.exists(table):
-            self.append(batch, table)
-            return n
-
+        observation = Observation()
+        fresh = fresh.dropDuplicates(keys).observe(
+            observation, F.count(F.lit(1)).alias("rows")
+        )
+        before = set(os.listdir(path)) if os.path.isdir(path) else None
+        writer = fresh.select(*[f.name for f in TABLE_SCHEMAS[table].fields]).write
         parts = TABLE_PARTITIONS.get(table, [])
-        existing = self.read(table)
         if parts:
-            part_vals = batch.select(*parts).distinct()
-            touched = existing.join(F.broadcast(part_vals), parts, "left_semi")
-            survivors = touched.join(batch.select(*keys), keys, "left_anti")
-            # materialize BEFORE overwriting the path being read from
-            merged = survivors.unionByName(batch).localCheckpoint()
-            (
-                merged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*parts)
-                .parquet(self.path(table))
-            )
-        else:
-            survivors = existing.join(batch.select(*keys), keys, "left_anti")
-            merged = survivors.unionByName(batch).localCheckpoint()
-            merged.write.mode("overwrite").parquet(self.path(table))
+            writer = writer.partitionBy(*parts)
+        writer.mode("append").parquet(path)
+        n = observation.get["rows"]
+        if not n:
+            # a write with no rows still makes the table dir, and on a
+            # flat table a schema-only part file: take back what it added
+            if before is None:
+                shutil.rmtree(path)
+            else:
+                for name in set(os.listdir(path)) - before:
+                    os.remove(os.path.join(path, name))
         return n
 
     def delete_keys(
@@ -174,7 +147,7 @@ class Warehouse:
         """Targeted deletion ("right to be forgotten"): remove every row
         matching the key set, rewriting ONLY the partitions that contain
         matches (anti-join survivors + dynamic partition overwrite, the
-        upsert_last_wins machinery inverted).
+        partition-scoped rewrite a MERGE would use).
 
         Partitions left empty by the delete are removed explicitly —
         dynamic overwrite only replaces partitions present in the
@@ -214,8 +187,6 @@ class Warehouse:
             .parquet(self.path(table))
         )
         # drop partition dirs the delete emptied entirely
-        import shutil
-
         for vals in part_vals:
             if vals not in surviving_parts:
                 d = os.path.join(self.path(table), _partition_dir(parts, vals))
@@ -236,8 +207,6 @@ class Warehouse:
         consistent (single-writer assumption, same as the reference's
         per-file transaction).  Returns the resulting file count.
         """
-        import shutil
-
         if not self.exists(table):
             return 0
         df = self.read(table)

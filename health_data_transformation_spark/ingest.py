@@ -5,13 +5,18 @@ Reference lifecycle (load_hhs.py:35-167): pandas scan -> per-row loop
 with up to 3 dup-probe SELECTs + 3 INSERTs per row (network round-trips
 per row) -> single commit -> quarantine CSV.
 
-Engine lifecycle: one declarative plan per target table —
-  scan (explicit schema) -> normalize -> validate-split -> in-batch
+Engine lifecycle: one pass per target table —
+  scan (explicit schema) -> normalize -> validate-split (each row
+  flagged once into a cached, observed frame) -> per table: in-batch
   dedup (deterministic first-wins) -> anti-join vs target ->
-  partitioned append + quarantine + load report.
-No driver-side loops; the whole load is a handful of Spark jobs whose
-shuffle structure is independent of row count (the anti-join probe is
-the only join, pruned to the batch's partitions/keys).
+  partitioned append; then quarantine + load report.
+No driver-side loops and no counting jobs: every count in the
+LoadReport is an observation on a write the load makes anyway (the
+first append fills the split's cache and yields input/invalid rows;
+each append yields its own rows added).  The whole load is a handful
+of Spark jobs whose shuffle structure is independent of row count (the
+anti-join probe is the only join; it reads the key columns of every
+target partition).
 """
 
 from __future__ import annotations
@@ -55,6 +60,22 @@ class LoadReport:
         return self
 
 
+def _report(
+    split: validate.Split, added: dict[str, int], fact: str,
+    warehouse: Warehouse, source: str, t0: float,
+) -> LoadReport:
+    """The load's report from its split and its appends' observed
+    counts; quarantines the invalid rows and releases the split.  A
+    valid row the ``fact`` table did not take is a duplicate."""
+    report = LoadReport(table_rows_added=added, **split.counts.get)
+    report.duplicate_rows = report.input_rows - report.invalid_rows - added[fact]
+    if report.invalid_rows:
+        warehouse.quarantine(split.invalid, source)
+    split.flagged.unpersist()
+    report.seconds = time.time() - t0
+    return report.log(source)
+
+
 def load_hhs(spark: SparkSession, csv_path: str, warehouse: Warehouse) -> LoadReport:
     """Weekly HHS ingest -> hospitals, hospital_locations,
     hospital_bed_information (+ quarantine).
@@ -80,13 +101,11 @@ def load_hhs_frame(raw, warehouse: Warehouse) -> LoadReport:
     rules = validate.non_negative(BED_METRIC_COLS) + validate.not_null(
         ["hospital_pk", "hospital_name", "collection_week"]
     )
-    # one input scan total: the flagged frame is cached and every
-    # consumer (counts, three appends, quarantine) reads that copy
-    valid, invalid, flagged, counts = validate.split_valid_cached(cleaned, rules)
-    report = LoadReport(
-        input_rows=counts["input_rows"], invalid_rows=counts["invalid_rows"]
-    )
-
+    # one input scan total: the first append fills the cached, observed
+    # flagged frame (and so yields the split's counts); the other
+    # appends and the quarantine read that copy
+    split = validate.split_valid(cleaned, rules)
+    valid = split.valid
     hospitals = valid.select("hospital_pk", "hospital_name")
     locations = valid.select(
         F.col("hospital_pk").alias("hospital_fk"),
@@ -96,25 +115,16 @@ def load_hhs_frame(raw, warehouse: Warehouse) -> LoadReport:
         F.col("hospital_pk").alias("hospital_fk"), "collection_week", *BED_METRIC_COLS
     )
 
-    report.table_rows_added["hospitals"] = warehouse.append_idempotent(
-        hospitals, "hospitals"
-    )
-    report.table_rows_added["hospital_locations"] = warehouse.append_idempotent(
-        locations, "hospital_locations"
-    )
-    report.table_rows_added["hospital_bed_information"] = warehouse.append_idempotent(
-        beds, "hospital_bed_information"
-    )
-    report.duplicate_rows = (
-        report.input_rows - report.invalid_rows
-        - report.table_rows_added["hospital_bed_information"]
-    )
-
-    if report.invalid_rows:
-        warehouse.quarantine(invalid, "hhs")
-    flagged.unpersist()
-    report.seconds = time.time() - t0
-    return report.log("hhs")
+    added = {
+        "hospitals": warehouse.append_idempotent(hospitals, "hospitals"),
+        "hospital_locations": warehouse.append_idempotent(
+            locations, "hospital_locations"
+        ),
+        "hospital_bed_information": warehouse.append_idempotent(
+            beds, "hospital_bed_information"
+        ),
+    }
+    return _report(split, added, "hospital_bed_information", warehouse, "hhs", t0)
 
 
 def load_quality(
@@ -157,22 +167,15 @@ def load_quality_frame(raw, warehouse: Warehouse) -> LoadReport:
         ),
         *validate.not_null(["facility_id"]),
     ]
-    valid, invalid, flagged, counts = validate.split_valid_cached(df, rules)
-    report = LoadReport(
-        input_rows=counts["input_rows"], invalid_rows=counts["invalid_rows"]
-    )
+    split = validate.split_valid(df, rules)
     added = warehouse.append_idempotent(
-        valid.select(
+        split.valid.select(
             "facility_id", "hospital_type", "hospital_ownership",
             "emergency_services", "hospital_overall_rating", "data_date",
         ),
         "hospital_quality_information",
     )
-    report.table_rows_added["hospital_quality_information"] = added
-    report.duplicate_rows = report.input_rows - report.invalid_rows - added
-
-    if report.invalid_rows:
-        warehouse.quarantine(invalid, "quality")
-    flagged.unpersist()
-    report.seconds = time.time() - t0
-    return report.log("quality")
+    return _report(
+        split, {"hospital_quality_information": added},
+        "hospital_quality_information", warehouse, "quality", t0,
+    )

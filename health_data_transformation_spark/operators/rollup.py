@@ -19,7 +19,7 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 
 def refresh_rollup(
@@ -33,25 +33,23 @@ def refresh_rollup(
     ``fact`` and overwrite exactly those partitions of the rollup table.
 
     ``aggregate`` must group by ``partition_col`` (plus any dims) so the
-    output can be partitioned the same way.  Returns rows written.
+    output can be partitioned the same way.  Returns rows written,
+    observed on the write itself.
     """
     if not len(touched):
         return 0
     scoped = fact.filter(F.col(partition_col).isin(list(touched)))
-    result = aggregate(scoped)
-    n = result.count()
-    spark = fact.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            result.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(rollup_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return n
+    observation = Observation()
+    result = aggregate(scoped).observe(
+        observation, F.count(F.lit(1)).alias("rows")
+    )
+    (
+        result.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(rollup_path)
+    )
+    return observation.get["rows"]
 
 
 def touched_partitions(batch: DataFrame, partition_col: str) -> list:

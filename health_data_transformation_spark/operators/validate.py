@@ -13,11 +13,12 @@ NULL semantics follow the reference: NULL *passes* a bound check (the
 ``pd.isna`` short-circuit at load_hhs.py:104), so bounds are expressed
 as ``isNull() | predicate``.
 
-Scale note: `split_valid` is one scan evaluated lazily per consumer;
-`split_valid_cached` is the loaders' path — a single cached
-materialization feeds the valid/invalid splits AND the load-report
-counts, so the input is read exactly once.  Predicates are codegen'd
-and pushed down.
+Scale note: `split_valid` evaluates the rules once per row into a
+cached, observed frame.  The first action over either side (the
+loaders' first append) reads the input once, fills the cache and
+yields the input/invalid counts; every later consumer (the other
+appends, the quarantine write) reads the cache.  No separate counting
+job runs.
 """
 
 from __future__ import annotations
@@ -26,9 +27,10 @@ from dataclasses import dataclass, field
 from functools import reduce
 from operator import and_
 from collections.abc import Sequence
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 
 @dataclass
@@ -58,50 +60,40 @@ def not_null(columns: Sequence[str]) -> list[Rule]:
     return [Rule(name=f"{c}_not_null", predicate=F.col(c).isNotNull()) for c in columns]
 
 
-def split_valid(df: DataFrame, rules: Sequence[Rule]) -> tuple[DataFrame, DataFrame]:
-    """Split into (valid, invalid) by the conjunction of all rules.
+class Split(NamedTuple):
+    """One batch split into ``valid`` and ``invalid`` rows.
+
+    Both sides read ``flagged``, the cached input with each row's
+    verdict; the caller unpersists it when done.  ``counts`` observes
+    ``input_rows`` and ``invalid_rows`` on that frame: ``counts.get``
+    returns them once the first action over either side has filled the
+    cache, and blocks until then.
+    """
+
+    valid: DataFrame
+    invalid: DataFrame
+    flagged: DataFrame
+    counts: Observation
+
+
+def split_valid(df: DataFrame, rules: Sequence[Rule]) -> Split:
+    """Split by the conjunction of all rules, evaluating it once per row.
 
     ``invalid`` carries a ``_failed_rules`` array naming each violated
     rule — richer than the reference's raw quarantine CSV while still
     containing the original row verbatim.
     """
-    if not rules:
-        return df, df.limit(0).withColumn("_failed_rules", F.array().cast("array<string>"))
-    combined = reduce(and_, (r.as_column() for r in rules))
-    failed = F.filter(
-        F.array(*[F.when(~r.as_column(), F.lit(r.name)) for r in rules]),
-        lambda x: x.isNotNull(),
+    combined = reduce(and_, (r.as_column() for r in rules), F.lit(True))
+    observation = Observation()
+    flagged = (
+        df.withColumn("_ok", combined)
+        .observe(
+            observation,
+            F.count(F.lit(1)).alias("input_rows"),
+            F.count_if(~F.col("_ok")).alias("invalid_rows"),
+        )
+        .cache()
     )
-    valid = df.filter(combined)
-    invalid = df.filter(~combined).withColumn("_failed_rules", failed)
-    return valid, invalid
-
-
-def split_valid_cached(
-    df: DataFrame, rules: Sequence[Rule]
-) -> tuple[DataFrame, DataFrame, DataFrame, dict]:
-    """``split_valid`` with single-materialization economics.
-
-    Marks each row with the combined predicate, caches the *flagged*
-    frame, and computes (input_rows, invalid_rows) with one aggregate
-    over that cache — so the input is scanned exactly ONCE regardless
-    of how many consumers follow (the three per-table appends, the
-    quarantine write, and the counts all read the same materialized
-    copy).  The previous pattern (`raw.count()` + `invalid.count()` +
-    the valid-side cache fill) cost three input scans per load — the
-    difference between 1x and 3x the ingest bytes at 100 TB.
-
-    Returns (valid, invalid, flagged, counts); the caller unpersists
-    ``flagged`` when done.
-    """
-    if not rules:
-        valid, invalid = split_valid(df, rules)
-        flagged = df.cache()
-        return valid, invalid, flagged, {
-            "input_rows": flagged.count(), "invalid_rows": 0,
-        }
-    combined = reduce(and_, (r.as_column() for r in rules))
-    flagged = df.withColumn("_ok", combined).cache()
     failed = F.filter(
         F.array(*[F.when(~r.as_column(), F.lit(r.name)) for r in rules]),
         lambda x: x.isNotNull(),
@@ -110,12 +102,4 @@ def split_valid_cached(
     invalid = flagged.filter(~F.col("_ok")).drop("_ok").withColumn(
         "_failed_rules", failed
     )
-    counts_row = flagged.agg(
-        F.count(F.lit(1)).alias("input_rows"),
-        F.sum(F.when(~F.col("_ok"), 1).otherwise(0)).alias("invalid_rows"),
-    ).first()
-    counts = {
-        "input_rows": int(counts_row["input_rows"]),
-        "invalid_rows": int(counts_row["invalid_rows"] or 0),
-    }
-    return valid, invalid, flagged, counts
+    return Split(valid, invalid, flagged, observation)

@@ -10,12 +10,17 @@ The process root owns them instead.  It is made on first use under
 deletes its parent's root.  Bounded streams remove their staging and
 checkpoint dirs earlier, as soon as the query stops
 (``streaming.bounded``).
+
+A process ended by a signal (SIGTERM, SIGKILL) runs no ``atexit`` hook,
+so its root stays behind; the next process to make its own root removes
+every ``hdt_<pid>_*`` root whose pid is no longer alive.
 """
 
 from __future__ import annotations
 
 import atexit
 import os
+import re
 import shutil
 import tempfile
 
@@ -27,9 +32,29 @@ def root() -> str:
     """This process's temp root, made on first use."""
     global _root, _owner
     if _root is None or _owner != os.getpid():
+        _remove_orphans()
         _root = tempfile.mkdtemp(prefix=f"hdt_{os.getpid()}_")
         _owner = os.getpid()
     return _root
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # a live process of another user
+        pass
+    return True
+
+
+def _remove_orphans() -> None:
+    """Remove the roots of processes that are gone."""
+    base = tempfile.gettempdir()
+    for name in os.listdir(base):
+        m = re.fullmatch(r"hdt_(\d+)_.+", name)
+        if m and not _alive(int(m.group(1))):
+            shutil.rmtree(os.path.join(base, name), ignore_errors=True)
 
 
 @atexit.register

@@ -70,3 +70,40 @@ def test_engine_temp_dirs_are_gone_after_exit(tmp_path):
     assert all(n > 0 for n in out["rows"]), out
     left = sorted(p for p in os.listdir(tmp_path) if p.startswith("hdt_"))
     assert left == []
+
+
+_ROOT_SCRIPT = """
+import sys, time
+sys.path.insert(0, sys.argv[1])
+from health_data_transformation_spark import scratch
+print(scratch.root(), flush=True)
+if sys.argv[2] == "hang":
+    time.sleep(600)
+"""
+
+
+def test_roots_of_dead_processes_are_removed(tmp_path):
+    """A process killed by SIGKILL runs no atexit hook and leaves its
+    root; the next process to make its own root removes it, and keeps
+    the root of a process that is still alive."""
+    import signal
+
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    killed = subprocess.Popen(
+        [sys.executable, "-c", _ROOT_SCRIPT, REPO, "hang"],
+        stdout=subprocess.PIPE, text=True, env=env,
+    )
+    orphan = killed.stdout.readline().strip()
+    killed.send_signal(signal.SIGKILL)
+    killed.wait(timeout=60)
+    killed.stdout.close()
+    assert os.path.isdir(orphan)
+    live = tmp_path / f"hdt_{os.getpid()}_live"
+    live.mkdir()
+
+    proc = subprocess.run(
+        [sys.executable, "-c", _ROOT_SCRIPT, REPO, "exit"],
+        capture_output=True, text=True, env=env, timeout=60,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert sorted(os.listdir(tmp_path)) == [live.name]

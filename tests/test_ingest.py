@@ -190,50 +190,6 @@ def test_incremental_rollup_refresh(spark, warehouse, hhs_csv_1, hhs_csv_2, tmp_
     assert stored == full
 
 
-def test_upsert_last_wins(spark, warehouse, hhs_csv_1):
-    """The MERGE-style complement of first-wins: re-delivered keys
-    REPLACE the stored rows; untouched rows survive."""
-    import datetime as dt
-
-    from health_data_transformation_spark.schemas import TABLE_SCHEMAS
-
-    load_hhs(spark, hhs_csv_1, warehouse)
-    beds = warehouse.read("hospital_bed_information")
-    h1_before = beds.filter(
-        (F.col("hospital_fk") == "H1")
-        & (F.col("collection_week") == dt.date(2022, 9, 23))
-    ).collect()[0]
-    assert h1_before["all_adult_hospital_beds_7_day_avg"] == 100.0
-    n_before = beds.count()
-
-    # corrected re-delivery of H1/2022-09-23
-    fixed = h1_before.asDict()
-    fixed["all_adult_hospital_beds_7_day_avg"] = 123.0
-    batch = spark.createDataFrame(
-        [tuple(fixed[f.name] for f in TABLE_SCHEMAS["hospital_bed_information"].fields)],
-        TABLE_SCHEMAS["hospital_bed_information"],
-    )
-    applied = warehouse.upsert_last_wins(batch, "hospital_bed_information")
-    assert applied == 1
-
-    after = warehouse.read("hospital_bed_information")
-    assert after.count() == n_before  # replaced, not appended
-    h1_after = after.filter(
-        (F.col("hospital_fk") == "H1")
-        & (F.col("collection_week") == dt.date(2022, 9, 23))
-    ).collect()[0]
-    assert h1_after["all_adult_hospital_beds_7_day_avg"] == 123.0
-    # a row in the same partition but different key survives untouched
-    assert after.filter(
-        (F.col("hospital_fk") == "H2")
-        & (F.col("collection_week") == dt.date(2022, 9, 23))
-    ).count() == 1
-    # rows in other partitions untouched
-    assert after.filter(
-        F.col("collection_week") == dt.date(2022, 9, 30)
-    ).count() == 1
-
-
 def test_load_hhs_header_only_file(spark, warehouse, tmp_path):
     """An empty delivery (header, no rows) is a clean no-op load."""
     from tests.conftest import HHS_HEADER, write_lines
@@ -314,3 +270,77 @@ def test_dynamic_partition_pruning_from_dim_filter(spark, tmp_path):
     [row] = joined.collect()
     expected = sum(i * 3 for i in range(1000) if (i % 10) % 2 == 0)
     assert row["s"] == expected
+
+
+def test_loads_and_rollup_take_counts_from_their_writes(
+    spark, warehouse, hhs_csv_1, cms_csv_1, tmp_path, monkeypatch
+):
+    """Every count a load reports (and a rollup refresh returns) is an
+    observation on a write it makes anyway: with ``DataFrame.count``
+    made to raise, the numbers are still right."""
+    import datetime as dt
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from health_data_transformation_spark.operators.rollup import refresh_rollup
+
+    def no_count(self):
+        raise AssertionError("a second execution ran to count rows")
+
+    monkeypatch.setattr(DataFrame, "count", no_count)
+
+    hhs = load_hhs(spark, hhs_csv_1, warehouse)
+    assert (hhs.input_rows, hhs.invalid_rows, hhs.duplicate_rows) == (6, 1, 1)
+    assert hhs.table_rows_added == {
+        "hospitals": 3, "hospital_locations": 3, "hospital_bed_information": 4,
+    }
+    cms = load_quality(spark, cms_csv_1, "2022-10-01", warehouse)
+    assert (cms.input_rows, cms.invalid_rows, cms.duplicate_rows) == (5, 0, 1)
+    assert cms.table_rows_added == {"hospital_quality_information": 4}
+    again = load_hhs(spark, hhs_csv_1, warehouse)
+    assert (again.input_rows, again.invalid_rows, again.duplicate_rows) == (6, 1, 5)
+    assert set(again.table_rows_added.values()) == {0}
+
+    n = refresh_rollup(
+        warehouse.read("hospital_bed_information"),
+        str(tmp_path / "rollup"),
+        "collection_week",
+        [dt.date(2022, 9, 23), dt.date(2022, 9, 30)],
+        lambda df: df.groupBy("collection_week").agg(F.count("*").alias("n")),
+    )
+    assert n == 2
+
+
+def test_loads_that_add_no_rows_add_no_files(
+    spark, warehouse, hhs_csv_1, cms_csv_1, tmp_path
+):
+    """A header-only first load and a re-delivered file leave the file
+    listing of every table dir unchanged."""
+    import os
+
+    from tests.conftest import HHS_HEADER, write_lines
+
+    from health_data_transformation_spark.schemas import TABLE_SCHEMAS
+
+    def listing():
+        return {
+            t: sorted(
+                os.path.relpath(os.path.join(d, f), warehouse.path(t))
+                for d, _, files in os.walk(warehouse.path(t))
+                for f in files
+            )
+            for t in TABLE_SCHEMAS
+        }
+
+    empty = listing()
+    header_only = write_lines(str(tmp_path / "empty.csv"), [HHS_HEADER])
+    load_hhs(spark, header_only, warehouse)
+    assert listing() == empty
+    assert not any(os.path.exists(warehouse.path(t)) for t in TABLE_SCHEMAS)
+
+    load_hhs(spark, hhs_csv_1, warehouse)
+    load_quality(spark, cms_csv_1, "2022-10-01", warehouse)
+    loaded = listing()
+    load_hhs(spark, hhs_csv_1, warehouse)
+    load_quality(spark, cms_csv_1, "2022-10-01", warehouse)
+    assert listing() == loaded

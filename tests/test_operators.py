@@ -38,18 +38,22 @@ def test_lenient_cast(spark):
 def test_validate_null_passes_bound_check(spark):
     # NULL passes >= 0 (reference pd.isna short-circuit, load_hhs.py:104)
     df = spark.createDataFrame([(1, None), (2, -1.0), (3, 3.0)], "id int, v double")
-    valid, invalid = validate.split_valid(df, validate.non_negative(["v"]))
-    assert {r["id"] for r in valid.collect()} == {1, 3}
-    bad = invalid.collect()
+    split = validate.split_valid(df, validate.non_negative(["v"]))
+    assert {r["id"] for r in split.valid.collect()} == {1, 3}
+    bad = split.invalid.collect()
     assert [r["id"] for r in bad] == [2]
     assert bad[0]["_failed_rules"] == ["v_non_negative"]
+    # counts come from the first action's pass over the input
+    assert split.counts.get == {"input_rows": 3, "invalid_rows": 1}
+    split.flagged.unpersist()
 
 
 def test_validate_multiple_rules_reported(spark):
     df = spark.createDataFrame([(1, -1.0, None)], "id int, a double, b string")
     rules = validate.non_negative(["a"]) + validate.not_null(["b"])
-    _, invalid = validate.split_valid(df, rules)
-    assert invalid.collect()[0]["_failed_rules"] == ["a_non_negative", "b_not_null"]
+    split = validate.split_valid(df, rules)
+    assert split.invalid.collect()[0]["_failed_rules"] == ["a_non_negative", "b_not_null"]
+    split.flagged.unpersist()
 
 
 def test_dedup_first_wins_deterministic(spark):

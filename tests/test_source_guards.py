@@ -1,6 +1,6 @@
 """Source-level guards over the package (no JVM): one runner for the
 bounded streams, one owner for temp dirs, one place that narrows the
-shuffle.
+shuffle, one pass per loaded table.
 
 - ``awaitTermination`` is called only in
   ``streaming.bounded.run_available_now``, which checks its result and
@@ -8,7 +8,10 @@ shuffle.
 - ``tempfile`` is imported only by ``scratch``, so every temp dir lives
   under the per-process root that is removed at exit.
 - ``spark.sql.shuffle.partitions`` is set at runtime only in
-  ``streaming.bounded.narrow_shuffle``.
+  ``streaming.bounded.narrow_shuffle``; ``partitionOverwriteMode`` is
+  never set as a session conf (writers pass it as an option).
+- There is one validation split, and the loaders and the rollup
+  refresh call no ``count()``: their row counts come from their writes.
 """
 
 from __future__ import annotations
@@ -72,8 +75,11 @@ def test_tempfile_only_in_the_scratch_helper():
     assert {m for m, _, _ in sites} == {"scratch.py"}, sites
 
 
-def test_shuffle_partitions_set_only_in_narrow_shuffle():
-    def sets_shuffle_partitions(n: ast.AST) -> bool:
+def _conf_set_sites(key: str) -> list[tuple[str, str, int]]:
+    """Sites that set the session conf ``key``: ``<x>.set(key, ...)``
+    calls and SQL ``SET key`` strings."""
+
+    def sets_key(n: ast.AST) -> bool:
         if not (
             isinstance(n, ast.Call)
             and isinstance(n.func, ast.Attribute)
@@ -81,20 +87,50 @@ def test_shuffle_partitions_set_only_in_narrow_shuffle():
             and n.args
         ):
             return False
-        key = n.args[0]
-        return (
-            isinstance(key, ast.Constant)
-            and key.value == "spark.sql.shuffle.partitions"
-        )
+        arg = n.args[0]
+        return isinstance(arg, ast.Constant) and arg.value == key
 
     def sql_sets_it(n: ast.AST) -> bool:
         return (
             isinstance(n, ast.Constant)
             and isinstance(n.value, str)
-            and "SET SPARK.SQL.SHUFFLE.PARTITIONS" in n.value.upper()
+            and f"SET {key.upper()}" in n.value.upper()
         )
 
-    sites = _sites(sets_shuffle_partitions) + _sites(sql_sets_it)
+    return _sites(sets_key) + _sites(sql_sets_it)
+
+
+def test_shuffle_partitions_set_only_in_narrow_shuffle():
+    sites = _conf_set_sites("spark.sql.shuffle.partitions")
     assert {(m, f) for m, f, _ in sites} == {
         ("streaming/bounded.py", "narrow_shuffle")
     }, sites
+
+
+def test_partition_overwrite_mode_is_never_a_session_conf():
+    """Writers pass ``partitionOverwriteMode`` as a per-write option."""
+    assert _conf_set_sites("spark.sql.sources.partitionOverwriteMode") == []
+
+
+def test_one_validation_split():
+    def names_cached_split(n: ast.AST) -> bool:
+        name = getattr(n, "name", None) or getattr(n, "attr", None)
+        return (name or getattr(n, "id", None)) == "split_valid_cached"
+
+    assert _sites(names_cached_split) == []
+
+
+def test_loaders_run_no_count():
+    """The loads' and the rollup's row counts come from their writes."""
+    modules = {"ingest.py", "operators/validate.py"}
+    functions = {
+        ("catalog.py", "append_idempotent"),
+        ("operators/rollup.py", "refresh_rollup"),
+    }
+    sites = _sites(
+        lambda n: isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "count"
+        and not n.args  # DataFrame.count(), not F.count(col)
+    )
+    assert [s for s in sites if s[0] in modules or s[:2] in functions] == []

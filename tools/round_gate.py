@@ -230,7 +230,7 @@ def main() -> int:
     if m_round is None:
         print(
             "GATE FAIL: artifact name must end in _rNN.json "
-            f"(e.g. CORRECTNESS_local_r07.json), got: {artifact}"
+            f"(e.g. CORRECTNESS_local_r13.json), got: {artifact}"
         )
         return 1
     this_round = int(m_round.group(1))
