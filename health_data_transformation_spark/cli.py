@@ -6,6 +6,10 @@ Usage:
   python -m health_data_transformation_spark.cli load-hhs <csv> --warehouse DIR
   python -m health_data_transformation_spark.cli load-quality <date> <csv> --warehouse DIR
   python -m health_data_transformation_spark.cli report <query> --warehouse DIR [params...]
+  python -m health_data_transformation_spark.cli snapshot-history --root DIR/<table>
+
+Every warehouse table is a snapshot table at ``<warehouse>/<table>``, so
+the ``snapshot-*`` commands work on it directly.
 """
 
 from __future__ import annotations
@@ -33,7 +37,9 @@ def main(argv: list[str] | None = None) -> int:
     p_q.add_argument("--warehouse", required=True)
 
     p_c = sub.add_parser(
-        "compact", help="bin-pack a table's small files (~128 MB targets)"
+        "compact",
+        help="bin-pack a table's small files (~128 MB targets); "
+        "older versions are vacuumed",
     )
     p_c.add_argument("table")
     p_c.add_argument("--warehouse", required=True)
@@ -50,7 +56,10 @@ def main(argv: list[str] | None = None) -> int:
     p_sh = sub.add_parser(
         "snapshot-history", help="list a snapshot table's commits"
     )
-    p_sh.add_argument("--root", required=True, help="snapshot table root")
+    p_sh.add_argument(
+        "--root", required=True,
+        help="snapshot table root (a warehouse table: <warehouse>/<table>)",
+    )
 
     p_sc = sub.add_parser(
         "snapshot-compact",
@@ -139,7 +148,17 @@ def main(argv: list[str] | None = None) -> int:
                           "seconds": round(time.time() - t0, 2),
                           "rows_deleted": n}))
     elif args.cmd == "compact":
-        n_files = wh.compact(args.table, target_file_mb=args.target_mb)
+        import os
+
+        t = wh.table(args.table)
+        v = t.compact(target_file_mb=args.target_mb)
+        t.vacuum(retain_last=1)
+        n_files = sum(
+            f.endswith(".parquet")
+            for d in t.manifest(v)["dirs"]
+            for _, _, files in os.walk(d)
+            for f in files
+        )
         print(json.dumps({"compact": args.table,
                           "seconds": round(time.time() - t0, 2),
                           "files": n_files}))

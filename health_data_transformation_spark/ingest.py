@@ -9,7 +9,10 @@ Engine lifecycle: one pass per target table —
   scan (explicit schema) -> normalize -> validate-split (each row
   flagged once into a cached, observed frame) -> per table: in-batch
   dedup (deterministic first-wins) -> anti-join vs target ->
-  partitioned append; then quarantine + load report.
+  snapshot append; the appends publish together (one transaction per
+  file load, load_hhs.py:148: a load that fails in any write changes
+  no table, and its retry reports what an uninterrupted load would);
+  then quarantine + load report.
 No driver-side loops and no counting jobs: every count in the
 LoadReport is an observation on a write the load makes anyway (the
 first append fills the split's cache and yields input/invalid rows;
@@ -65,13 +68,12 @@ def _report(
     warehouse: Warehouse, source: str, t0: float,
 ) -> LoadReport:
     """The load's report from its split and its appends' observed
-    counts; quarantines the invalid rows and releases the split.  A
-    valid row the ``fact`` table did not take is a duplicate."""
+    counts; quarantines the invalid rows.  A valid row the ``fact``
+    table did not take is a duplicate."""
     report = LoadReport(table_rows_added=added, **split.counts.get)
     report.duplicate_rows = report.input_rows - report.invalid_rows - added[fact]
     if report.invalid_rows:
         warehouse.quarantine(split.invalid, source)
-    split.flagged.unpersist()
     report.seconds = time.time() - t0
     return report.log(source)
 
@@ -115,16 +117,20 @@ def load_hhs_frame(raw, warehouse: Warehouse) -> LoadReport:
         F.col("hospital_pk").alias("hospital_fk"), "collection_week", *BED_METRIC_COLS
     )
 
-    added = {
-        "hospitals": warehouse.append_idempotent(hospitals, "hospitals"),
-        "hospital_locations": warehouse.append_idempotent(
-            locations, "hospital_locations"
-        ),
-        "hospital_bed_information": warehouse.append_idempotent(
-            beds, "hospital_bed_information"
-        ),
-    }
-    return _report(split, added, "hospital_bed_information", warehouse, "hhs", t0)
+    try:
+        with warehouse.load():
+            added = {
+                "hospitals": warehouse.append_idempotent(hospitals, "hospitals"),
+                "hospital_locations": warehouse.append_idempotent(
+                    locations, "hospital_locations"
+                ),
+                "hospital_bed_information": warehouse.append_idempotent(
+                    beds, "hospital_bed_information"
+                ),
+            }
+        return _report(split, added, "hospital_bed_information", warehouse, "hhs", t0)
+    finally:
+        split.flagged.unpersist()
 
 
 def load_quality(
@@ -165,17 +171,22 @@ def load_quality_frame(raw, warehouse: Warehouse) -> LoadReport:
             F.col("hospital_overall_rating") >= 0,
             null_passing_cols=("hospital_overall_rating",),
         ),
-        *validate.not_null(["facility_id"]),
+        # a NULL data_date is quarantined: it cannot name a partition
+        *validate.not_null(["facility_id", "data_date"]),
     ]
     split = validate.split_valid(df, rules)
-    added = warehouse.append_idempotent(
-        split.valid.select(
-            "facility_id", "hospital_type", "hospital_ownership",
-            "emergency_services", "hospital_overall_rating", "data_date",
-        ),
-        "hospital_quality_information",
-    )
-    return _report(
-        split, {"hospital_quality_information": added},
-        "hospital_quality_information", warehouse, "quality", t0,
-    )
+    try:
+        # one table: its append is one commit already
+        added = warehouse.append_idempotent(
+            split.valid.select(
+                "facility_id", "hospital_type", "hospital_ownership",
+                "emergency_services", "hospital_overall_rating", "data_date",
+            ),
+            "hospital_quality_information",
+        )
+        return _report(
+            split, {"hospital_quality_information": added},
+            "hospital_quality_information", warehouse, "quality", t0,
+        )
+    finally:
+        split.flagged.unpersist()

@@ -11,7 +11,9 @@ pattern the reference implements imperatively by collecting
 
 NULL semantics follow the reference: NULL *passes* a bound check (the
 ``pd.isna`` short-circuit at load_hhs.py:104), so bounds are expressed
-as ``isNull() | predicate``.
+as ``isNull() | predicate`` over their ``null_passing_cols``.  Any other
+NULL verdict fails its rule: every row lands in exactly one of
+``valid`` and ``invalid``, and ``_failed_rules`` names the rule.
 
 Scale note: `split_valid` evaluates the rules once per row into a
 cached, observed frame.  The first action over either side (the
@@ -35,7 +37,8 @@ from pyspark.sql import Column, DataFrame, Observation
 
 @dataclass
 class Rule:
-    """A named validation predicate; NULL-passing by default."""
+    """A named validation predicate.  NULL in a ``null_passing_cols``
+    column passes; any other NULL verdict fails the rule."""
 
     name: str
     predicate: Column
@@ -45,7 +48,7 @@ class Rule:
         pred = self.predicate
         for c in self.null_passing_cols:
             pred = F.col(c).isNull() | pred
-        return pred
+        return F.coalesce(pred, F.lit(False))
 
 
 def non_negative(columns: Sequence[str]) -> list[Rule]:

@@ -12,8 +12,8 @@ The 100 TB join story has three tiers:
 
 `tests/test_bucketed.py` asserts the no-Exchange property from the
 physical plan.  Caveats encoded here: both sides must agree on bucket
-count and key, and the session must not auto-broadcast the smaller
-side (that would be tier 1 winning anyway).
+count and key, and the join carries a ``merge`` hint so a small side is
+not broadcast instead (no session conf is changed).
 """
 
 from __future__ import annotations
@@ -47,7 +47,12 @@ def cobucketed_join(
 ) -> DataFrame:
     """Join two tables bucketed on ``on`` with the same bucket count.
 
-    Plain ``join`` — Catalyst recognizes the matching output
-    partitioning from the bucket spec and elides both exchanges.
+    A sort-merge join (``merge`` hint) — Catalyst recognizes the
+    matching output partitioning from the bucket spec and elides both
+    exchanges.
     """
-    return spark.table(left_table).join(spark.table(right_table), list(on))
+    return (
+        spark.table(left_table)
+        .hint("merge")
+        .join(spark.table(right_table), list(on))
+    )

@@ -82,87 +82,3 @@ def _last_emit(memo: DataFrame) -> DataFrame:
         .filter(F.col("_rk") == 1)
         .drop("_rk")
     )
-
-
-TWS_OUTPUT_SCHEMA = "user_id LONG, n LONG, max_cents LONG"
-
-
-def tws_user_stats(spark: SparkSession, sf_dir: str, timeout_sec: int = 300) -> DataFrame:
-    """Per-user (count, max) via ``transformWithStateInPandas`` — the
-    second-generation arbitrary-state API (typed state handles, timers,
-    RocksDB-backed stores) that supersedes applyInPandasWithState.
-
-    ENVIRONMENT-GATED: the TWS Python runner requires ``google.protobuf``
-    (not installed in this container), so this raises a clear error where
-    the dependency is missing; the applyInPandasWithState twin above is
-    the dependency-free path.  tests/test_rangejoin_stateful.py skips
-    accordingly.
-
-    Same bounded-run harness as stateful_user_totals: events parquet as
-    an AvailableNow stream, memory sink, final emit per key equals the
-    batch GROUP BY.  State is one ValueState tuple per key — O(keys),
-    spillable via RocksDB at production key cardinalities.
-    """
-    import pandas as pd
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf for its "
-            "Python runner; install protobuf or use stateful_user_totals"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    ensure_compat(spark)
-    run = BoundedStream(spark, "tws")
-    stream = staged_events_stream(run, sf_dir)
-
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    keyed = stream.select("user_id", cents.alias("cents")).groupBy("user_id")
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "n LONG, max_cents LONG")
-
-        def handleInputRows(self, key, rows, timer_values):
-            prev = self._agg.get() if self._agg.exists() else (0, None)
-            n, mx = prev[0], prev[1]
-            for batch in rows:
-                n += len(batch)
-                bmax = int(batch["cents"].max()) if len(batch) else None
-                mx = bmax if mx is None else (mx if bmax is None else max(mx, bmax))
-            self._agg.update((n, mx))
-            yield pd.DataFrame({"user_id": [key[0]], "n": [n], "max_cents": [mx]})
-
-        def close(self) -> None:
-            pass
-
-    out = keyed.transformWithStateInPandas(
-        statefulProcessor=UserStats(),
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        memo = run.to_memory(out, "update", timeout_sec)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-    return _last_emit(memo)

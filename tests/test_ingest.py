@@ -101,6 +101,51 @@ def test_load_quality_new_snapshot_same_facilities(spark, warehouse, cms_csv_1):
     assert warehouse.read("hospital_quality_information").count() == 8
 
 
+def test_failed_load_changes_no_table(
+    spark, warehouse, hhs_csv_1, hhs_csv_2, tmp_path, monkeypatch
+):
+    """A table write that lands its files and then fails (a crash in
+    job commit) fails the whole load, whichever of the load's writes it
+    hits: no table shows any of the load's rows, and the retry reports
+    what an uninterrupted load reports (load_hhs.py:148, one
+    transaction per file)."""
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from health_data_transformation_spark.catalog import Warehouse
+    from health_data_transformation_spark.schemas import TABLE_SCHEMAS
+
+    def contents(wh):
+        return {t: sorted(map(tuple, wh.read(t).collect())) for t in TABLE_SCHEMAS}
+
+    def report(r):
+        return (r.table_rows_added, r.input_rows, r.invalid_rows, r.duplicate_rows)
+
+    uninterrupted = Warehouse(spark, str(tmp_path / "uninterrupted"))
+    load_hhs(spark, hhs_csv_1, uninterrupted)
+    want = load_hhs(spark, hhs_csv_2, uninterrupted)
+
+    load_hhs(spark, hhs_csv_1, warehouse)
+    write = DataFrameWriter.parquet
+    for k in (1, 2, 3):  # each of the load's three table writes
+        before = contents(warehouse)
+        calls = []
+
+        def write_then_fail(self, path, *args, **kwargs):
+            write(self, path, *args, **kwargs)
+            calls.append(path)
+            if len(calls) == k:
+                raise RuntimeError("injected fault after the write")
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", write_then_fail)
+        with pytest.raises(RuntimeError, match="injected fault"):
+            load_hhs(spark, hhs_csv_2, warehouse)
+        monkeypatch.undo()
+        assert contents(warehouse) == before
+    assert report(load_hhs(spark, hhs_csv_2, warehouse)) == report(want)
+    assert contents(warehouse) == contents(uninterrupted)
+
+
 def test_compact_preserves_contents(spark, warehouse, hhs_csv_1, hhs_csv_2):
     load_hhs(spark, hhs_csv_1, warehouse)
     load_hhs(spark, hhs_csv_2, warehouse)
@@ -116,7 +161,12 @@ def test_compact_preserves_contents(spark, warehouse, hhs_csv_1, hhs_csv_2):
             recursive=True,
         )
     )
-    n_files = warehouse.compact("hospital_bed_information")
+    table = warehouse.table("hospital_bed_information")
+    table.compact()
+    n_files = sum(
+        len(glob.glob(os.path.join(d, "*.parquet")))
+        for d in table.manifest(table.current_version())["dirs"]
+    )
     after = sorted(
         tuple(r) for r in warehouse.read("hospital_bed_information").collect()
     )
@@ -220,9 +270,7 @@ def test_load_hhs_all_invalid_file(spark, warehouse, tmp_path):
     assert report.input_rows == 2
     assert report.invalid_rows == 2
     assert report.table_rows_added["hospital_bed_information"] == 0
-    assert not warehouse.exists("hospital_bed_information") or (
-        warehouse.read("hospital_bed_information").count() == 0
-    )
+    assert warehouse.table("hospital_bed_information").current_version() == 0
 
 
 def test_warehouse_scan_prunes_partitions(spark, warehouse, hhs_csv_1):
@@ -336,7 +384,7 @@ def test_loads_that_add_no_rows_add_no_files(
     header_only = write_lines(str(tmp_path / "empty.csv"), [HHS_HEADER])
     load_hhs(spark, header_only, warehouse)
     assert listing() == empty
-    assert not any(os.path.exists(warehouse.path(t)) for t in TABLE_SCHEMAS)
+    assert not any(warehouse.table(t).current_version() for t in TABLE_SCHEMAS)
 
     load_hhs(spark, hhs_csv_1, warehouse)
     load_quality(spark, cms_csv_1, "2022-10-01", warehouse)

@@ -56,6 +56,18 @@ def test_validate_multiple_rules_reported(spark):
     split.flagged.unpersist()
 
 
+def test_validate_null_verdict_fails_the_rule(spark):
+    # a NULL verdict outside null_passing_cols fails its rule: the row
+    # is invalid (not dropped from both sides) and the rule is named
+    df = spark.createDataFrame([(1, None), (2, -1.0), (3, 3.0)], "id int, v double")
+    split = validate.split_valid(df, [validate.Rule("v_pos", F.col("v") >= 0)])
+    assert [r["id"] for r in split.valid.collect()] == [3]
+    bad = {r["id"]: r["_failed_rules"] for r in split.invalid.collect()}
+    assert bad == {1: ["v_pos"], 2: ["v_pos"]}
+    assert split.counts.get == {"input_rows": 3, "invalid_rows": 2}
+    split.flagged.unpersist()
+
+
 def test_dedup_first_wins_deterministic(spark):
     df = spark.createDataFrame(
         [("k1", "2022-01-01", 10.0), ("k1", "2022-01-01", 99.0), ("k2", "2022-01-01", 5.0)],

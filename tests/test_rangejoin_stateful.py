@@ -7,7 +7,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pyspark.sql.functions as F
-import pytest
 
 from health_data_transformation_spark.operators.rangejoin import (
     bucketed_range_join,
@@ -97,29 +96,6 @@ def test_stateful_totals_equals_batch(spark):
         .collect()
     }
     assert streamed == batch
-
-
-def test_tws_user_stats_equals_batch_or_skips(spark):
-    """transformWithStateInPandas twin of the keyed-state totals; skipped
-    where its protobuf runtime dependency is absent."""
-    pytest.importorskip("google.protobuf")
-    import pyspark.sql.functions as F
-
-    from health_data_transformation_spark.sources.tables import load_table
-    from health_data_transformation_spark.streaming.stateful import tws_user_stats
-
-    sf = "/root/testdata/sf0.001"
-    got = tws_user_stats(spark, sf).orderBy("user_id").collect()
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    want = (
-        load_table(spark, sf, "events")
-        .select("user_id", cents.alias("cents"))
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.max("cents").alias("max_cents"))
-        .orderBy("user_id")
-        .collect()
-    )
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
 def test_interval_overlap_join_equals_naive(spark):

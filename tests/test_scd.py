@@ -153,9 +153,16 @@ def test_delete_keys_right_to_be_forgotten(spark, warehouse, hhs_csv_1):
     # untouched rows survive; idempotent re-delete is a no-op
     assert after.count() == n_before - 2
     assert warehouse.delete_keys("hospital_bed_information", doomed, ["hospital_fk"]) == 0
-    # the 2022-09-30 partition contained ONLY H1 -> its dir must be gone
+    # the rows are physically gone: no parquet file under the table
+    # holds H1 (older versions were vacuumed with the delete)
+    import glob
     import os
-    part_dir = os.path.join(
-        warehouse.path("hospital_bed_information"), "collection_week=2022-09-30"
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(
+        os.path.join(warehouse.path("hospital_bed_information"), "**", "*.parquet"),
+        recursive=True,
     )
-    assert not os.path.isdir(part_dir)
+    held = [pq.read_table(f, columns=["hospital_fk"]).column(0).to_pylist() for f in files]
+    assert files and not any("H1" in fks for fks in held)

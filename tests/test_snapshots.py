@@ -450,8 +450,8 @@ def test_vacuum_collects_orphans_from_aborted_commits(spark, tmp_path):
 def test_partition_key_prevalidation_no_orphan_write(spark, tmp_path):
     """ADVICE r11 #2: bad partition keys (NULL *or empty string* —
     Spark writes both as the Hive default partition) are rejected
-    BEFORE the distributed write, so no orphan data directory is
-    burned, and the error names both cases."""
+    before anything is published, the written data directory is
+    removed (no orphan), and the error names both cases."""
     t = _pt_table(spark, str(tmp_path / "t"))
     data_root = os.path.join(str(tmp_path / "t"), "data")
     dirs_before = sorted(os.listdir(data_root))
@@ -878,6 +878,21 @@ def test_partition_column_type_contract(spark, tmp_path):
     t2 = SnapshotTable(spark, str(tmp_path / "t2"), partition_by="b")
     t2.commit_overwrite(spark.createDataFrame([(1, 2, 10)], "k int, b int, x int"))
     assert rows(t2.read()) == [(1, 2, 10)]
+    # so are dates: str(date) and the hive segment are both YYYY-MM-DD
+    import datetime as dt
+
+    d1, d2 = dt.date(2022, 9, 23), dt.date(2022, 9, 30)
+    t3 = SnapshotTable(spark, str(tmp_path / "t3"), partition_by="d")
+    t3.commit_overwrite(
+        spark.createDataFrame([(1, d1, 10), (2, d2, 20)], "k int, d date, x int")
+    )
+    t3.commit_upsert(
+        spark.createDataFrame([(1, d1, 11)], "k int, d date, x int"), keys=["k", "d"]
+    )
+    m1, m2 = t3.manifest(1)["partitions"], t3.manifest(2)["partitions"]
+    assert set(m2) == {"2022-09-23", "2022-09-30"}
+    assert m2["2022-09-30"] == m1["2022-09-30"]  # untouched leaf reused
+    assert rows(t3.read()) == [(1, d1, 11), (2, d2, 20)]
 
 
 def test_rebase_schema_rederivation(spark, tmp_path, monkeypatch):

@@ -10,8 +10,12 @@ shuffle, one pass per loaded table.
 - ``spark.sql.shuffle.partitions`` is set at runtime only in
   ``streaming.bounded.narrow_shuffle``; ``partitionOverwriteMode`` is
   never set as a session conf (writers pass it as an option).
-- There is one validation split, and the loaders and the rollup
-  refresh call no ``count()``: their row counts come from their writes.
+- Session confs are set or unset only by ``session.py`` and
+  ``narrow_shuffle``: nothing else changes a session another caller
+  may share.
+- There is one validation split, and the loaders, the warehouse, the
+  snapshot append/write path and the rollup refresh call no
+  ``count()``: their row counts come from their writes.
 """
 
 from __future__ import annotations
@@ -112,6 +116,22 @@ def test_partition_overwrite_mode_is_never_a_session_conf():
     assert _conf_set_sites("spark.sql.sources.partitionOverwriteMode") == []
 
 
+def test_session_conf_changed_only_by_the_session_helpers():
+    def changes_conf(n: ast.AST) -> bool:
+        return (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in ("set", "unset")
+            and isinstance(n.func.value, ast.Attribute)
+            and n.func.value.attr == "conf"
+        )
+
+    sites = _sites(changes_conf)
+    assert {
+        (m, f) for m, f, _ in sites if m != "session.py"
+    } == {("streaming/bounded.py", "narrow_shuffle")}, sites
+
+
 def test_one_validation_split():
     def names_cached_split(n: ast.AST) -> bool:
         name = getattr(n, "name", None) or getattr(n, "attr", None)
@@ -122,9 +142,13 @@ def test_one_validation_split():
 
 def test_loaders_run_no_count():
     """The loads' and the rollup's row counts come from their writes."""
-    modules = {"ingest.py", "operators/validate.py"}
+    modules = {"ingest.py", "catalog.py", "operators/validate.py"}
     functions = {
-        ("catalog.py", "append_idempotent"),
+        ("snapshots.py", "commit_append"),
+        ("snapshots.py", "stage_append"),
+        ("snapshots.py", "_write"),
+        ("snapshots.py", "_write_data"),
+        ("snapshots.py", "_write_data_partitioned"),
         ("operators/rollup.py", "refresh_rollup"),
     }
     sites = _sites(
