@@ -12,17 +12,21 @@ round-trips (load_hhs.py:70-145) with:
 - quarantine sinks for rejected rows (load_hhs.py:152-155 pattern)
 
 Atomicity: an append is a snapshot commit, visible all at once when its
-manifest is published or not at all.  Inside ``Warehouse.load()`` the
-appends of one file load are written first and published together at
-the end, so a load that fails in any write leaves every table as it
-was — the reference's one transaction per file (load_hhs.py:148).  The
-publishes themselves are manifest links, no Spark work; a process that
-dies between two of them leaves the first tables committed.
+manifest is published or not at all.  Appends run only inside
+``Warehouse.load()``: the appends of one file load are written first
+and published together at the end, so a load that fails in any write
+leaves every table as it was — the reference's one transaction per
+file (load_hhs.py:148).  The publishes themselves are manifest links,
+no Spark work; a publish that fails (a racing committer, an I/O
+error), or a process that dies between two of them, leaves the tables
+published before it committed.
 
 One pass per append: the anti-join, the in-batch dedup and the row
 count run in the write's own execution (the count is an observation on
 the written frame), so nothing is executed twice.  A batch that adds no
-rows publishes nothing and leaves no file.  A flat table adds a commit
+rows publishes nothing and leaves no file (a table never loaded has no
+directory).  Date filters on a partitioned table prune its leaf
+directories (``SnapshotTable.read``).  A flat table adds a commit
 directory per adding load until the manifest would list more of them
 than Spark's parallel partition discovery threshold; that append folds
 the table into one directory (``SnapshotTable.stage_append``).
@@ -92,26 +96,28 @@ class Warehouse:
             return self.spark.createDataFrame(
                 self.spark.sparkContext.emptyRDD(), TABLE_SCHEMAS[table]
             )
-        return t.read().select(*[f.name for f in TABLE_SCHEMAS[table].fields])
+        return t.read()  # appends write the declared columns, in order
 
     @contextmanager
     def load(self) -> Iterator[None]:
         """One file load as one transaction: the appends made inside
         are written as they run and published together on exit; if
         anything inside raises, their data is removed and no table
-        changes.  Append each table at most once per load (a second
-        append would not see the first one's rows)."""
-        self._staged = []
+        changes.  If a publish raises, the tables published before it
+        stay committed and the rest are removed.  One load at a time
+        per Warehouse; append each table at most once per load (a
+        second append would not see the first one's rows)."""
+        if self._staged is not None:
+            raise RuntimeError("a load is already open on this Warehouse")
+        self._staged = staged = []
         try:
             yield
-        except BaseException:
-            for staged in self._staged:
-                staged.discard()
-            raise
-        else:
-            for staged in self._staged:
-                staged.publish()
+            while staged:
+                staged[0].publish()
+                staged.pop(0)
         finally:
+            for rest in staged:
+                rest.discard()
             self._staged = None
 
     def append_idempotent(
@@ -122,8 +128,10 @@ class Warehouse:
         Existing side is pruned to key columns but not to partitions:
         the LeftAnti probe reads the keys of every partition.  Returns
         the number of rows appended, observed on the write itself.
-        Inside ``load()`` the rows become visible when the load ends.
+        Runs inside ``load()``; the rows become visible when it ends.
         """
+        if self._staged is None:
+            raise RuntimeError("append_idempotent runs inside Warehouse.load()")
         keys = list(keys or TABLE_KEYS[table])
         t = self.table(table)
         if t.current_version():
@@ -138,13 +146,9 @@ class Warehouse:
         fresh = fresh.dropDuplicates(keys).observe(
             observation, F.count(F.lit(1)).alias("rows")
         )
-        staged = t.stage_append(
-            fresh.select(*[f.name for f in TABLE_SCHEMAS[table].fields])
+        self._staged.append(
+            t.stage_append(fresh.select(*[f.name for f in TABLE_SCHEMAS[table].fields]))
         )
-        if self._staged is None:
-            staged.publish()
-        else:
-            self._staged.append(staged)
         return observation.get["rows"]
 
     def delete_keys(

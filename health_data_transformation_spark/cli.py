@@ -7,6 +7,7 @@ Usage:
   python -m health_data_transformation_spark.cli load-quality <date> <csv> --warehouse DIR
   python -m health_data_transformation_spark.cli report <query> --warehouse DIR [params...]
   python -m health_data_transformation_spark.cli snapshot-history --root DIR/<table>
+  python -m health_data_transformation_spark.cli snapshot-compact --root DIR/<table> [--target-mb N]
 
 Every warehouse table is a snapshot table at ``<warehouse>/<table>``, so
 the ``snapshot-*`` commands work on it directly.
@@ -36,15 +37,6 @@ def main(argv: list[str] | None = None) -> int:
     p_q.add_argument("csv")
     p_q.add_argument("--warehouse", required=True)
 
-    p_c = sub.add_parser(
-        "compact",
-        help="bin-pack a table's small files (~128 MB targets); "
-        "older versions are vacuumed",
-    )
-    p_c.add_argument("table")
-    p_c.add_argument("--warehouse", required=True)
-    p_c.add_argument("--target-mb", type=int, default=128)
-
     p_d = sub.add_parser(
         "delete", help="targeted key deletion (right-to-be-forgotten)"
     )
@@ -63,9 +55,11 @@ def main(argv: list[str] | None = None) -> int:
 
     p_sc = sub.add_parser(
         "snapshot-compact",
-        help="OPTIMIZE: rewrite the current snapshot as one directory",
+        help="OPTIMIZE: rewrite the current snapshot as one directory "
+        "of ~--target-mb files (a table with no version is left as is)",
     )
     p_sc.add_argument("--root", required=True)
+    p_sc.add_argument("--target-mb", type=int, default=128)
 
     p_sv = sub.add_parser(
         "snapshot-vacuum",
@@ -96,7 +90,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.cmd == "snapshot-history":
             print(json.dumps({"history": t.history()}))
         elif args.cmd == "snapshot-compact":
-            v = t.compact()
+            v = t.compact(target_file_mb=args.target_mb)
             print(json.dumps({"compact": args.root,
                               "seconds": round(time.time() - t0, 2),
                               "version": v}))
@@ -147,21 +141,6 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"delete": args.table,
                           "seconds": round(time.time() - t0, 2),
                           "rows_deleted": n}))
-    elif args.cmd == "compact":
-        import os
-
-        t = wh.table(args.table)
-        v = t.compact(target_file_mb=args.target_mb)
-        t.vacuum(retain_last=1)
-        n_files = sum(
-            f.endswith(".parquet")
-            for d in t.manifest(v)["dirs"]
-            for _, _, files in os.walk(d)
-            for f in files
-        )
-        print(json.dumps({"compact": args.table,
-                          "seconds": round(time.time() - t0, 2),
-                          "files": n_files}))
     else:
         from .plans import hospital_queries as Q
 

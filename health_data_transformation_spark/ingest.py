@@ -176,14 +176,14 @@ def load_quality_frame(raw, warehouse: Warehouse) -> LoadReport:
     ]
     split = validate.split_valid(df, rules)
     try:
-        # one table: its append is one commit already
-        added = warehouse.append_idempotent(
-            split.valid.select(
-                "facility_id", "hospital_type", "hospital_ownership",
-                "emergency_services", "hospital_overall_rating", "data_date",
-            ),
-            "hospital_quality_information",
-        )
+        with warehouse.load():
+            added = warehouse.append_idempotent(
+                split.valid.select(
+                    "facility_id", "hospital_type", "hospital_ownership",
+                    "emergency_services", "hospital_overall_rating", "data_date",
+                ),
+                "hospital_quality_information",
+            )
         return _report(
             split, {"hospital_quality_information": added},
             "hospital_quality_information", warehouse, "quality", t0,

@@ -50,16 +50,19 @@ holds a single partition value, partition-pruned predicates and the
 survivor rewrite scan do prune at file level.  Partitioned commits duplicate the partition column into
 the path key (``_pt``) so every data file keeps the full row schema:
 manifests can then list LEAF directories from different commits side
-by side and readers take the explicit manifest schema with no
-basePath/partition-discovery coupling.  Partition keys are checked by
-an observation on the write itself (no probe job): a bad key removes
-the written directory and raises before anything is published.
-``vacuum`` collects at leaf
+by side.  Partition keys are checked by an observation on the write
+itself (no probe job): a bad key removes the written directory and
+raises before anything is published.  ``vacuum`` collects at leaf
 granularity: a commit directory whose partitions are partially
 reused by retained versions loses only its unreferenced leaves.
 Readers never list the table root: ``read`` hands Spark the manifest's
 data directories and Spark lists only those, so planning cost is
 O(directories + files in the snapshot), not O(everything under root).
+Every commit directory is named as a hive level (``_commit=<id>``), so
+on a partitioned table Spark's partition discovery below ``data/``
+reads the partition columns from the leaf paths and a filter on them
+prunes leaves before any file is opened.  The table's directory and
+``data/`` exist only while it has a version or an unpublished write.
 """
 
 from __future__ import annotations
@@ -75,7 +78,7 @@ from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 class SnapshotConflict(RuntimeError):
@@ -126,7 +129,6 @@ class SnapshotTable:
             if partition_by is not None and not isinstance(partition_by, str)
             else partition_by
         )
-        os.makedirs(os.path.join(root, "data"), exist_ok=True)
         v = self.current_version()
         if v >= 1:
             recorded = self._read_manifest(v).get("partition_by")
@@ -155,6 +157,8 @@ class SnapshotTable:
         return os.path.join(self.root, f"_v{version:06d}.json")
 
     def current_version(self) -> int:
+        if not os.path.isdir(self.root):
+            return 0
         versions = [
             int(f[2:8])
             for f in os.listdir(self.root)
@@ -207,6 +211,7 @@ class SnapshotTable:
         if os.path.exists(path):
             raise SnapshotConflict(f"version {version} already committed")
         tmp = path + f".tmp-{os.getpid()}"
+        os.makedirs(self.root, exist_ok=True)  # a commit of no data
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
         try:
@@ -361,13 +366,24 @@ class SnapshotTable:
         # the manifest rename and get a clean SnapshotConflict there,
         # not a path-exists error mid-write (the Delta GUID-file-name
         # rationale); the loser's directory becomes an orphan that
-        # vacuum() collects
+        # vacuum() collects.  The "_commit=" name makes the directory a
+        # hive level that partition discovery in read() steps over.
         return os.path.join(
-            self.root, "data", f"c{version:06d}-{tag}-{uuid.uuid4().hex[:8]}"
+            self.root, "data",
+            f"_commit={version:06d}-{tag}-{uuid.uuid4().hex[:8]}",
         )
 
-    @staticmethod
-    def _write(df: DataFrame, d: str, partition_cols: Sequence[str] = ()) -> None:
+    def _discard(self, d: str) -> None:
+        """Remove the unpublished data directory ``d``; a table left with
+        no version and no data keeps no directory at all."""
+        shutil.rmtree(d, ignore_errors=True)
+        for empty in (os.path.join(self.root, "data"), self.root):
+            try:
+                os.rmdir(empty)
+            except OSError:  # not empty: the table has data or versions
+                return
+
+    def _write(self, df: DataFrame, d: str, partition_cols: Sequence[str] = ()) -> None:
         """Write ``df`` to the new directory ``d``.  A write that fails
         takes ``d`` back: no manifest references it yet."""
         writer = df.write.mode("error")
@@ -376,7 +392,7 @@ class SnapshotTable:
         try:
             writer.parquet(d)
         except BaseException:
-            shutil.rmtree(d, ignore_errors=True)
+            self._discard(d)
             raise
 
     def _write_data(self, df: DataFrame, version: int, tag: str) -> str:
@@ -393,11 +409,10 @@ class SnapshotTable:
         directory and returns {}.
 
         The partition column is DUPLICATED into the path key (``_pt``)
-        so the data files keep the full row schema: manifests can then
-        mix leaf directories from different commits and readers plan
-        from the explicit manifest schema with no basePath /
-        partition-discovery coupling (a path-only partition column
-        would vanish when leaves are read directly).
+        so the data files keep the full row schema: a leaf read on its
+        own (the delete rebase probe, a fold) still has every column,
+        while ``read`` takes the column from the path so that filters
+        on it prune leaves.
 
         Bad partition keys are counted by an observation on the write
         itself, so checking them costs no job of its own: NULL and
@@ -431,7 +446,7 @@ class SnapshotTable:
             path_keys,
         )
         if observation.get["bad"]:
-            shutil.rmtree(d)
+            self._discard(d)
             raise ValueError(
                 f"NULL, empty-string, or '/'-containing values in "
                 f"partition columns {pcols!r} — partition-scoped "
@@ -446,7 +461,7 @@ class SnapshotTable:
             key = "/".join(unquote(s.split("=", 1)[1]) for s in segs)
             out[key] = leaf
         if not out:
-            shutil.rmtree(d)
+            self._discard(d)
         return dict(sorted(out.items()))
 
     def _path_keys(self) -> list[str]:
@@ -580,7 +595,7 @@ class SnapshotTable:
                     v, "append", schema, new_map, set(new_map), df.schema,
                     blind=True, merge_schema=merge_schema,
                 ),
-                lambda: shutil.rmtree(commit_dir, ignore_errors=True),
+                lambda: self._discard(commit_dir),
             )
         observation = Observation()
         new_dir = self._write_data(
@@ -588,7 +603,7 @@ class SnapshotTable:
         )
         if not observation.get["rows"]:
             # Spark still writes a schema-only part file
-            shutil.rmtree(new_dir)
+            self._discard(new_dir)
             return Staged(self.current_version, lambda: None)
         dirs = (self._read_manifest(v - 1)["dirs"] if v > 1 else []) + [new_dir]
         threshold = self.spark.conf.get(
@@ -598,11 +613,11 @@ class SnapshotTable:
             folded = self._write_data(
                 self.spark.read.schema(schema).parquet(*dirs), v, "fold"
             )
-            shutil.rmtree(new_dir)
+            self._discard(new_dir)
             new_dir, dirs = folded, [folded]
         return Staged(
             lambda: self._publish(v, dirs, "append", schema),
-            lambda: shutil.rmtree(new_dir, ignore_errors=True),
+            lambda: self._discard(new_dir),
         )
 
     def commit_overwrite(self, df: DataFrame) -> int:
@@ -882,8 +897,11 @@ class SnapshotTable:
         nothing is deleted until :meth:`vacuum`.  On a partitioned
         table the rows are repartitioned by the partition columns, so
         each partition gets coalesced files (not one per input task).
+        A table with no version stays as it is (returns 0).
         """
         v = self.current_version() + 1
+        if v == 1:
+            return 0
         schema = self._table_schema(v - 1)
         cur = self.read()
         size_bytes = sum(
@@ -927,7 +945,8 @@ class SnapshotTable:
             keep.update(self._read_manifest(v)["dirs"])
         data_root = os.path.join(self.root, "data")
         removed = []
-        for name in sorted(os.listdir(data_root)):
+        names = os.listdir(data_root) if os.path.isdir(data_root) else []
+        for name in sorted(names):
             d = os.path.join(data_root, name)
             if d in keep:
                 continue
@@ -959,7 +978,9 @@ class SnapshotTable:
 
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot-isolated read; ``version`` pins a historical state
-        (time travel), default = latest."""
+        (time travel), default = latest.  A partitioned table's
+        partition columns come from the leaf paths, so a filter on them
+        reaches the scan as a partition filter."""
         v = self.current_version() if version is None else version
         if v < 1:
             raise ValueError(f"no snapshots in {self.root}")
@@ -970,8 +991,21 @@ class SnapshotTable:
         dirs = self._read_manifest(v)["dirs"]
         schema = self._table_schema(v)
         reader = self.spark.read
+        path_cols = dict(zip(self._pcols, self._path_keys())) if self._pcols else {}
+        if path_cols:
+            # data/_commit=<id>/_pt=<value>/: discovery below data/
+            # yields _commit and the path keys as partition columns
+            reader = reader.option("basePath", os.path.join(self.root, "data"))
         if schema is not None:
             # explicit log schema: files missing evolved columns read
             # them as NULL, and planning never touches file footers
-            reader = reader.schema(schema)
-        return reader.parquet(*dirs)
+            # (a path key takes its partition column's type)
+            extra = [StructField("_commit", StringType())] * bool(path_cols)
+            extra += [StructField(pk, schema[c].dataType) for c, pk in path_cols.items()]
+            reader = reader.schema(StructType(schema.fields + extra))
+        df = reader.parquet(*dirs)
+        if not path_cols:
+            return df
+        # one selectExpr: a Column per field costs a JVM call each
+        keep = [c for c in (schema or df.schema).names if c != "_commit" and c not in path_cols.values()]
+        return df.selectExpr(*[f"`{path_cols.get(c, c)}` AS `{c}`" for c in keep])

@@ -359,7 +359,7 @@ def test_read_empty_table_raises(spark, tmp_path):
     with pytest.raises(ValueError):
         t.read()
     assert t.current_version() == 0
-    assert not os.listdir(os.path.join(str(tmp_path / "t"), "data"))
+    assert not os.path.exists(str(tmp_path / "t"))  # opening makes no dir
 
 
 def test_upsert_as_first_commit_is_overwrite(spark, tmp_path):
