@@ -15,7 +15,7 @@ partition pruning at the scan.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 
 from ..functions.vector import dot, norm
 
@@ -320,6 +320,53 @@ def build_ivf_store(
     return assigned, centroids.withMetadata("cell", meta)
 
 
+def _check_ivf_store(
+    assigned: DataFrame,
+    centroids: DataFrame,
+    centroid_cols: set[str],
+    built_by: str,
+    n_probes: int,
+    vec_col: str,
+    id_col: str,
+) -> None:
+    """The store validation of every IVF search: both frames carry the
+    columns ``built_by`` writes (``assigned`` its cell, vector and id;
+    ``centroids`` its cell and ``centroid_cols``), and ``n_probes`` does
+    not exceed the ``hdt_n_cells`` stamped on ``cell`` at build time (the
+    ADVICE-r9 params-with-the-store contract; unstamped frames pass)."""
+    for frame, need, name in (
+        (assigned, {"cell", vec_col, id_col}, "assigned"),
+        (centroids, {"cell", *centroid_cols}, "centroids"),
+    ):
+        missing = need - set(frame.columns)
+        if missing:
+            raise ValueError(
+                f"store frame '{name}' lacks column(s) {sorted(missing)}; "
+                f"build it with {built_by}"
+            )
+    meta = centroids.schema["cell"].metadata or {}
+    if "hdt_n_cells" in meta and n_probes > int(meta["hdt_n_cells"]):
+        raise ValueError(
+            f"n_probes={n_probes} exceeds the store's n_cells="
+            f"{int(meta['hdt_n_cells'])} ({built_by} metadata) — "
+            "probing every cell is a full scan; rebuild with more cells "
+            "or lower n_probes"
+        )
+
+
+def _stored_cosine(assigned: DataFrame, vec_col: str, query_col: str) -> Column:
+    """The floored cosine of the IVF store searches: the same expression
+    as brute_force_top_k/cosine_scores, with the store's precomputed
+    ``_vnorm`` substituted when present (the query side carries
+    ``_qnorm``)."""
+    vnorm = (
+        F.col("_vnorm") if "_vnorm" in assigned.columns else norm(F.col(vec_col))
+    )
+    sim = dot(F.col(vec_col), F.col(query_col)) / (vnorm * F.col("_qnorm"))
+    quant = F.lit(float(10 ** 6))
+    return F.floor(sim * quant) / quant
+
+
 def ivf_search_stored(
     assigned: DataFrame,
     centroids: DataFrame,
@@ -344,24 +391,10 @@ def ivf_search_stored(
     exact floored-cosine top-k inside them, reusing the store's
     precomputed ``_vnorm`` when present instead of re-folding norms.
     """
-    for frame, need, name in (
-        (assigned, {"cell", vec_col, id_col}, "assigned"),
-        (centroids, {"cell", "_centroid", "_cnorm"}, "centroids"),
-    ):
-        missing = need - set(frame.columns)
-        if missing:
-            raise ValueError(
-                f"store frame '{name}' lacks column(s) {sorted(missing)}; "
-                "build it with build_ivf_store"
-            )
-    meta = centroids.schema["cell"].metadata or {}
-    if "hdt_n_cells" in meta and n_probes > int(meta["hdt_n_cells"]):
-        raise ValueError(
-            f"n_probes={n_probes} exceeds the store's n_cells="
-            f"{int(meta['hdt_n_cells'])} (build_ivf_store metadata) — "
-            "probing every cell is a full scan; rebuild with more cells "
-            "or lower n_probes"
-        )
+    _check_ivf_store(
+        assigned, centroids, {"_centroid", "_cnorm"}, "build_ivf_store",
+        n_probes, vec_col, id_col,
+    )
     q = query.withColumn("_qnorm", norm(query_col))
     cent_scored = centroids.crossJoin(F.broadcast(q)).withColumn(
         "_qsim",
@@ -375,16 +408,9 @@ def ivf_search_stored(
         .collect()
     ]
     filtered = assigned.filter(F.col("cell").isin(probes))
-    # same floored-cosine expression as brute_force_top_k/cosine_scores,
-    # with the stored norm substituted when the store provides it
-    vnorm = (
-        F.col("_vnorm") if "_vnorm" in assigned.columns else norm(F.col(vec_col))
-    )
     scored = _with_query(filtered, q, vec_col)
-    sim = dot(F.col(vec_col), F.col(query_col)) / (vnorm * F.col("_qnorm"))
-    quant = F.lit(float(10 ** 6))
     return (
-        scored.withColumn("sim", F.floor(sim * quant) / quant)
+        scored.withColumn("sim", _stored_cosine(assigned, vec_col, query_col))
         .select(F.col(id_col), F.col("sim"))
         .orderBy(F.col("sim").desc(), F.col(id_col))
         .limit(k)
@@ -428,22 +454,10 @@ def ivf_search_batch(
     Returns (query_id, id, sim, rank) with rank 1..k per query,
     tiebroken (sim desc, id asc) — engine-stable and oracle-exact.
     """
-    for frame, need, name in (
-        (assigned, {"cell", vec_col, id_col}, "assigned"),
-        (centroids, {"cell", "_centroid", "_cnorm"}, "centroids"),
-    ):
-        missing = need - set(frame.columns)
-        if missing:
-            raise ValueError(
-                f"store frame '{name}' lacks column(s) {sorted(missing)}; "
-                "build it with build_ivf_store"
-            )
-    meta = centroids.schema["cell"].metadata or {}
-    if "hdt_n_cells" in meta and n_probes > int(meta["hdt_n_cells"]):
-        raise ValueError(
-            f"n_probes={n_probes} exceeds the store's n_cells="
-            f"{int(meta['hdt_n_cells'])} — see ivf_search_stored"
-        )
+    _check_ivf_store(
+        assigned, centroids, {"_centroid", "_cnorm"}, "build_ivf_store",
+        n_probes, vec_col, id_col,
+    )
     q = queries.select(query_id_col, query_col).withColumn(
         "_qnorm", norm(query_col)
     )
@@ -452,22 +466,17 @@ def ivf_search_batch(
         dot(F.col("_centroid"), F.col(query_col))
         / (F.col("_cnorm") * F.col("_qnorm")),
     )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.desc("_qsim"), F.asc("cell")
-    )
-    probes = (
-        cq.withColumn("_pr", F.row_number().over(wq))
-        .filter(F.col("_pr") <= n_probes)
-        .select(query_id_col, "cell", query_col, "_qnorm")
-    )
     return _probe_cells_topk(
-        assigned, probes, k, vec_col, id_col, query_col, query_id_col
+        assigned, cq, F.desc("_qsim"), n_probes, k, vec_col, id_col,
+        query_col, query_id_col,
     )
 
 
 def _probe_cells_topk(
     assigned: DataFrame,
-    probes: DataFrame,
+    cq: DataFrame,
+    cell_order: Column,
+    n_probes: int,
     k: int,
     vec_col: str,
     id_col: str,
@@ -476,18 +485,22 @@ def _probe_cells_topk(
 ) -> DataFrame:
     """Shared tail of the batch IVF searches (cosine-probed
     ``ivf_search_batch`` and integer-d2-probed
-    ``ivf_lloyd_search_batch``): broadcast the |Q| x n_probes probe
-    set against the stored assignment table's cell key, score the
-    exact floored cosine with stored norms, and run the two-phase
-    per-query top-k.  Returns (query_id, id, sim, rank)."""
-    vnorm = (
-        F.col("_vnorm") if "_vnorm" in assigned.columns else norm(F.col(vec_col))
+    ``ivf_lloyd_search_batch``): keep each query's ``n_probes`` best
+    cells of ``cq`` (queries x centroids, ranked by ``cell_order``
+    then cell — every window group is exactly n_cells rows), broadcast
+    that |Q| x n_probes probe set against the stored assignment
+    table's cell key, score the exact floored cosine with stored norms,
+    and run the two-phase per-query top-k.  Returns (query_id, id, sim,
+    rank)."""
+    wq = Window.partitionBy(query_id_col).orderBy(cell_order, F.asc("cell"))
+    probes = (
+        cq.withColumn("_pr", F.row_number().over(wq))
+        .filter(F.col("_pr") <= n_probes)
+        .select(query_id_col, "cell", query_col, "_qnorm")
     )
-    sim = dot(F.col(vec_col), F.col(query_col)) / (vnorm * F.col("_qnorm"))
-    quant = F.lit(float(10 ** 6))
     scored = (
         assigned.join(F.broadcast(probes), "cell")
-        .withColumn("sim", F.floor(sim * quant) / quant)
+        .withColumn("sim", _stored_cosine(assigned, vec_col, query_col))
         .select(query_id_col, F.col(id_col), F.col("sim"))
     )
     from .topk import top_k_per_group_scalable
@@ -570,38 +583,19 @@ def ivf_lloyd_search_batch(
     from ..functions.vector import int8_quantize
     from .kmeans import _d2
 
-    for frame, need, name in (
-        (assigned, {"cell", vec_col, id_col}, "assigned"),
-        (centroids, {"cell", "_centroid_int"}, "centroids"),
-    ):
-        missing = need - set(frame.columns)
-        if missing:
-            raise ValueError(
-                f"store frame '{name}' lacks column(s) {sorted(missing)}; "
-                "build it with build_ivf_store_lloyd"
-            )
-    meta = centroids.schema["cell"].metadata or {}
-    if "hdt_n_cells" in meta and n_probes > int(meta["hdt_n_cells"]):
-        raise ValueError(
-            f"n_probes={n_probes} exceeds the store's n_cells="
-            f"{int(meta['hdt_n_cells'])} — see ivf_search_stored"
-        )
+    _check_ivf_store(
+        assigned, centroids, {"_centroid_int"}, "build_ivf_store_lloyd",
+        n_probes, vec_col, id_col,
+    )
     q = queries.select(query_id_col, query_col).withColumn(
         "_qnorm", norm(query_col)
     ).withColumn("_qq", int8_quantize(query_col))
     cq = q.crossJoin(F.broadcast(centroids)).withColumn(
         "_qd2", _d2(F.col("_qq"), F.col("_centroid_int"))
     )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.asc("_qd2"), F.asc("cell")
-    )
-    probes = (
-        cq.withColumn("_pr", F.row_number().over(wq))
-        .filter(F.col("_pr") <= n_probes)
-        .select(query_id_col, "cell", query_col, "_qnorm")
-    )
     return _probe_cells_topk(
-        assigned, probes, k, vec_col, id_col, query_col, query_id_col
+        assigned, cq, F.asc("_qd2"), n_probes, k, vec_col, id_col,
+        query_col, query_id_col,
     )
 
 

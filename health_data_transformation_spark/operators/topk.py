@@ -5,15 +5,18 @@ states, top/bottom-10 ratings — /root/reference/Reporting.py:94,196,262-263).
 each partition keeps a k-sized heap, only k rows per partition reach the
 driver-side merge — no global sort, which is the correct physical shape
 at any scale.  Grouped top-k uses a rank window, which shuffles once on
-the group key.
+the group key.  The global and per-group prefix scans (row number,
+running sum, running max) share one range-slice helper, ``_prefix_scan``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from typing import Any
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql.types import DataType
 
 
 def top_k(df: DataFrame, order_by: Sequence[Column], k: int) -> DataFrame:
@@ -47,67 +50,118 @@ def top_and_bottom(
     return top.unionAll(bottom)
 
 
+def _prefix_scan(
+    df: DataFrame,
+    range_keys: Sequence[Column],
+    num_partitions: int | None,
+    slice_agg: Column,
+    carry: Callable[[Any, Any], Any],
+    start: Any = 0,
+    group: Column | None = None,
+    value_type: DataType | None = None,
+) -> tuple[DataFrame, Column]:
+    """The shared two-phase shape of the prefix scans below: a global
+    (or per-group) scan WITHOUT a single-partition window, which would
+    funnel every row through one task.
+
+    Range-partition on ``range_keys`` (global order is preserved across
+    slices), tag each row with its slice id ``_pid``, collect
+    ``slice_agg`` per slice (per ``(group, slice)`` when ``group`` is
+    given: one row per slice reaches the driver, never the data) and
+    fold the collected values in slice order with ``carry`` from
+    ``start``.  Each slice's offset is the carried value of all EARLIER
+    slices of its group.  Returns the tagged frame and the offset
+    column; the caller adds its local window over ``_pid``.
+
+    The frame is localCheckpointed BEFORE spark_partition_id() is read:
+    without the barrier a later consumer (a self-join, an
+    AQE-re-coalesced branch) could re-evaluate the exchange with other
+    partition ids than the offsets were measured on — a real wrong
+    answer at sf0.1 when a ranked frame was joined twice in one plan.
+    It is lazy: the offsets collect is its first consumer and
+    materializes every partition, so an eager count() would be one
+    extra full pass.
+
+    The offset is an ``element_at(create_map(...))`` lookup, not a
+    when/otherwise chain one level deep per slice (codegen/stack
+    blowups at hundreds of slices, ADVICE r5).  A None offset (a
+    running max before any non-NULL value) is left out of the map, so
+    the lookup reads NULL; with no entries the offset is ``start``.
+    Offsets are cast to ``value_type`` when given.  A ``group`` key is
+    built from the SAME Spark string cast on the collected and the
+    probe side — Python ``str(g)`` differs from Spark's cast for
+    booleans, dates and floats, and ``concat_ws`` skips NULLs (ADVICE
+    r5) — so ``group`` must be NULL-free.
+    """
+    part = (
+        df.repartitionByRange(num_partitions, *range_keys)
+        if num_partitions
+        else df.repartitionByRange(*range_keys)
+    )
+    part = part.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
+        eager=False
+    )
+    by = [] if group is None else [group.alias("_gk")]
+    rows = sorted(
+        tuple(r) for r in part.groupBy(*by, F.col("_pid")).agg(slice_agg).collect()
+    )
+
+    def lit(v: Any) -> Column:
+        return F.lit(v) if value_type is None else F.lit(v).cast(value_type)
+
+    entries: list[Column] = []
+    acc: dict[tuple, Any] = {}
+    for *gk, pid, v in rows:
+        before = acc.get(tuple(gk), start)
+        if before is not None:
+            key = (
+                F.lit(pid)
+                if group is None
+                else F.concat_ws("|", F.lit(gk[0]), F.lit(str(pid)))
+            )
+            entries += [key, lit(before)]
+        acc[tuple(gk)] = carry(before, v)
+    if not entries:
+        return part, lit(start)
+    probe = (
+        F.col("_pid")
+        if group is None
+        else F.concat_ws("|", group, F.col("_pid").cast("string"))
+    )
+    return part, F.element_at(F.create_map(*entries), probe)
+
+
+def _rows_before(order_by: Sequence[Column], *partition_by: str) -> WindowSpec:
+    """The rows strictly before each row of a slice: the local window of
+    the exclusive scans."""
+    return (
+        Window.partitionBy(*partition_by, "_pid")
+        .orderBy(*order_by)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+
+
 def global_row_number(
     df: DataFrame,
     order_by: Sequence[Column],
     out_col: str = "rn",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Global 1-based row_number WITHOUT a single-partition window.
+    """Global 1-based row_number WITHOUT a single-partition window
+    (``_prefix_scan``): rank within each range slice, then shift each
+    slice by the row count of all earlier slices.
 
-    ``row_number().over(Window.orderBy(...))`` funnels every row through
-    one task — fine for a 6-row report, fatal for a corpus-sized
-    vocabulary.  This is the scalable shape: range-partition on the sort
-    key (global order across partitions is preserved), rank locally,
-    then shift each partition by the total count of all earlier
-    partitions.  The offset table is one row per partition — collected,
-    never the data.  Two shuffle-free passes over the range-partitioned
-    frame (Spark caches nothing here; the range exchange is reused by
-    both the count and the rank because we materialize offsets from a
-    tiny aggregate, not a second sort).
-
-    Callers must make ``order_by`` a total order (include a tiebreak
-    column) for deterministic ids.
-
-    The range-partitioned frame is localCheckpointed BEFORE
-    spark_partition_id() is read: the offsets are collected from one
-    evaluation, but without the barrier a later consumer (a self-join,
-    an AQE-re-coalesced branch) could re-evaluate the exchange with
-    different runtime partition ids and silently mis-rank — observed
-    as a real wrong-answer at sf0.1 when the ranked frame was joined
-    twice in one plan.  The checkpoint freezes the physical layout the
-    offsets were measured on.
+    ``row_number().over(Window.orderBy(...))`` funnels every row
+    through one task — fine for a 6-row report, fatal for a
+    corpus-sized vocabulary.  Callers must make ``order_by`` a total
+    order (include a tiebreak column) for deterministic ids.
     """
-    part = (
-        df.repartitionByRange(num_partitions, *order_by)
-        if num_partitions
-        else df.repartitionByRange(*order_by)
+    part, off = _prefix_scan(
+        df, order_by, num_partitions, F.count("*").alias("_n"),
+        lambda acc, n: acc + n,
     )
-    part = part.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
-        # eager=False (r13): the offsets collect right below is the
-        # first consumer and its map side computes (and persists)
-        # every partition — eager's count() was one extra full pass.
-        # The layout-freeze guarantee is unchanged: no other consumer
-        # exists before that collect materializes the checkpoint.
-        eager=False
-    )
-    counts = part.groupBy("_pid").agg(F.count("*").alias("_n"))
-    rows = sorted((r["_pid"], r["_n"]) for r in counts.collect())
-    offsets, acc = {}, 0
-    for pid, n in rows:
-        offsets[pid] = acc
-        acc += n
-    off_expr = F.element_at(
-        F.create_map(
-            *[F.lit(x) for kv in offsets.items() for x in kv]
-        ),
-        F.col("_pid"),
-    ) if offsets else F.lit(0)
     w = Window.partitionBy("_pid").orderBy(*order_by)
-    return (
-        part.withColumn(out_col, F.row_number().over(w) + off_expr)
-        .drop("_pid")
-    )
+    return part.withColumn(out_col, F.row_number().over(w) + off).drop("_pid")
 
 
 def top_k_per_group_scalable(
@@ -147,60 +201,23 @@ def global_running_sum(
     out_col: str = "cum_before",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Exclusive global prefix sum WITHOUT a single-partition window.
-
-    Same two-phase shape as global_row_number: range-partition on the
-    sort key (preserving global order across partitions), take the
-    per-partition EXCLUSIVE running sum locally, then shift each
-    partition by the total of all earlier partitions.  The offset table
-    is one (partition, sum) row per partition — collected, never the
-    data.  ``out_col`` = sum of ``val_col`` over all rows strictly
-    before this row in ``order_by`` order.
+    """Exclusive global prefix sum WITHOUT a single-partition window
+    (``_prefix_scan``): ``out_col`` = sum of ``val_col`` over all rows
+    strictly before this row in ``order_by`` order (NULL values count
+    as 0; the first row reads 0).
 
     Callers must make ``order_by`` a total order for deterministic
-    prefix sums.  This is the scalable cumulative-sum for manifest- and
+    prefix sums.  This is the scalable cumulative sum for manifest- and
     ledger-sized frames that can still reach millions of rows (file
-    compaction planning, quota ledgers) where
-    ``Window.orderBy(...)`` alone would funnel everything through one
-    task.
+    compaction planning, quota ledgers).
     """
-    part = (
-        df.repartitionByRange(num_partitions, *order_by)
-        if num_partitions
-        else df.repartitionByRange(*order_by)
+    part, off = _prefix_scan(
+        df, order_by, num_partitions, F.sum(val_col).alias("_s"),
+        lambda acc, s: acc + (s or 0),
     )
-    # localCheckpoint BEFORE reading spark_partition_id — see
-    # global_row_number: offsets must be measured on the same physical
-    # layout every consumer reads.
-    part = part.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
-        # eager=False (r13): the offsets collect right below is the
-        # first consumer and its map side computes (and persists)
-        # every partition — eager's count() was one extra full pass.
-        # The layout-freeze guarantee is unchanged: no other consumer
-        # exists before that collect materializes the checkpoint.
-        eager=False
-    )
-    sums = part.groupBy("_pid").agg(F.sum(val_col).alias("_s"))
-    rows = sorted((r["_pid"], r["_s"] or 0) for r in sums.collect())
-    offsets, acc = {}, 0
-    for pid, s in rows:
-        offsets[pid] = acc
-        acc += s
-    off_expr = (
-        F.element_at(
-            F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
-            F.col("_pid"),
-        )
-        if offsets
-        else F.lit(0)
-    )
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w = _rows_before(order_by)
     local = F.coalesce(F.sum(val_col).over(w), F.lit(0))
-    return part.withColumn(out_col, local + off_expr).drop("_pid")
+    return part.withColumn(out_col, local + off).drop("_pid")
 
 
 def grouped_running_sum(
@@ -216,12 +233,10 @@ def grouped_running_sum(
 
     ``sum().over(Window.partitionBy(group))`` hands each group to a
     single reducer — fatal when the group column is low-cardinality
-    (5 languages over a corpus; the q271 window class).  Same
-    two-phase shape as global_running_sum, with the group key leading
-    the range partitioning so slices never mix groups: range-partition
-    on (group, order), take per-(group, slice) sums, shift each slice
-    by the total of EARLIER slices of the same group.  The offset
-    table is one row per (group, slice) — collected, never the data.
+    (5 languages over a corpus; the q271 window class).  The group key
+    leads the range partitioning so slices never mix groups, and each
+    (group, slice) is shifted by the total of EARLIER slices of the
+    same group (``_prefix_scan`` with ``group``).
 
     Callers must make (group, order_by) a total order for
     deterministic prefix sums.  Group keys may be NULL (mapped to a
@@ -230,69 +245,15 @@ def grouped_running_sum(
     keys in use — not for e.g. binary).
     """
     gcol = F.col(group_by)
-    keys = [gcol.asc(), *order_by]
-    part = (
-        df.repartitionByRange(num_partitions, *keys)
-        if num_partitions
-        else df.repartitionByRange(*keys)
+    gstr = F.coalesce(gcol.cast("string"), F.lit("\x00<NULL>"))
+    part, off = _prefix_scan(
+        df, [gcol.asc(), *order_by], num_partitions,
+        F.sum(val_col).alias("_s"), lambda acc, s: acc + (s or 0),
+        group=gstr,
     )
-    # localCheckpoint BEFORE reading spark_partition_id — see
-    # global_row_number: offsets must be measured on the same physical
-    # layout every consumer reads.
-    part = part.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
-        # eager=False (r13): the offsets collect right below is the
-        # first consumer and its map side computes (and persists)
-        # every partition — eager's count() was one extra full pass.
-        # The layout-freeze guarantee is unchanged: no other consumer
-        # exists before that collect materializes the checkpoint.
-        eager=False
-    )
-    # The map key must be built from the SAME cast semantics on both the
-    # build (collected) and probe (expression) side.  Python str(g) does
-    # NOT match Spark's string cast for booleans ('True' vs 'true'),
-    # dates/timestamps/floats — and concat_ws silently skips NULL group
-    # keys, so a str(None)='None' build key would never be probed
-    # (ADVICE r5, silent-wrong-answer class).  Fix: phase 1 aggregates
-    # on Spark's own cast with a NULL sentinel, and the collected value
-    # of that expression keys the map.
-    null_sentinel = "\x00<NULL>"
-    gstr = F.coalesce(gcol.cast("string"), F.lit(null_sentinel))
-    sums = part.groupBy(gstr.alias("_gk"), F.col("_pid")).agg(
-        F.sum(val_col).alias("_s")
-    )
-    rows = sorted(
-        ((r["_gk"], r["_pid"], r["_s"] or 0) for r in sums.collect()),
-        key=lambda t: (t[0], t[1]),
-    )
-    offsets: dict[tuple, int] = {}
-    acc: dict = {}
-    for gk, pid, s in rows:
-        offsets[(gk, pid)] = acc.get(gk, 0)
-        acc[gk] = acc.get(gk, 0) + s
-    off_expr = (
-        F.element_at(
-            F.create_map(
-                *[
-                    x
-                    for (gk, pid), v in offsets.items()
-                    for x in (
-                        F.concat_ws("|", F.lit(gk), F.lit(str(pid))),
-                        F.lit(v),
-                    )
-                ]
-            ),
-            F.concat_ws("|", gstr, F.col("_pid").cast("string")),
-        )
-        if offsets
-        else F.lit(0)
-    )
-    w = (
-        Window.partitionBy(group_by, "_pid")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w = _rows_before(order_by, group_by)
     local = F.coalesce(F.sum(val_col).over(w), F.lit(0))
-    return part.withColumn(out_col, local + off_expr).drop("_pid")
+    return part.withColumn(out_col, local + off).drop("_pid")
 
 
 def global_running_max(
@@ -306,60 +267,18 @@ def global_running_max(
     (the running-max sibling of global_running_sum; the primitive
     behind sort-based skyline/dominance scans).  ``out_col`` = max of
     ``val_col`` over all rows strictly before this row in ``order_by``
-    order, NULL for the first row.  Same two-phase shape: range
-    partition, local exclusive running max, shift each slice by the
-    max of all earlier slices (one collected row per slice).
+    order, NULL for the first row and while only NULLs came before.
+    Each slice's local max is combined with the max of all earlier
+    slices by ``F.greatest``, which ignores a NULL offset.
 
     Callers must make ``order_by`` a total order for determinism.
     """
-    part = (
-        df.repartitionByRange(num_partitions, *order_by)
-        if num_partitions
-        else df.repartitionByRange(*order_by)
+    part, off = _prefix_scan(
+        df, order_by, num_partitions, F.max(val_col).alias("_m"),
+        lambda acc, m: m if m is not None and (acc is None or m > acc) else acc,
+        start=None,
+        value_type=df.schema[val_col].dataType,
     )
-    # localCheckpoint BEFORE reading spark_partition_id — see
-    # global_row_number: offsets must be measured on the layout read.
-    part = part.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
-        # eager=False (r13): the offsets collect right below is the
-        # first consumer and its map side computes (and persists)
-        # every partition — eager's count() was one extra full pass.
-        # The layout-freeze guarantee is unchanged: no other consumer
-        # exists before that collect materializes the checkpoint.
-        eager=False
-    )
-    sums = part.groupBy("_pid").agg(F.max(val_col).alias("_m"))
-    rows = sorted((r["_pid"], r["_m"]) for r in sums.collect())
-    offsets: dict[int, object] = {}
-    acc = None
-    for pid, m in rows:
-        offsets[pid] = acc
-        if m is not None and (acc is None or m > acc):
-            acc = m
-    # NULL-safe slice offset via create_map + element_at, like the
-    # sum/rank siblings — a when/otherwise chain one level deep per
-    # partition risks Catalyst codegen/stack blowups at the
-    # hundreds-of-partitions regime this operator exists for (ADVICE
-    # r5).  None-valued entries (the first slice, or all-NULL earlier
-    # slices) are simply OMITTED: element_at on a missing key returns
-    # NULL, and F.greatest ignores NULLs.
-    val_type = part.schema[val_col].dataType
-    entries = [
-        x
-        for pid, v in offsets.items()
-        if v is not None
-        for x in (F.lit(pid), F.lit(v).cast(val_type))
-    ]
-    off_expr = (
-        F.element_at(F.create_map(*entries), F.col("_pid"))
-        if entries
-        else F.lit(None).cast(val_type)
-    )
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w = _rows_before(order_by)
     local = F.max(val_col).over(w)
-    return part.withColumn(
-        out_col, F.greatest(local, off_expr)
-    ).drop("_pid")
+    return part.withColumn(out_col, F.greatest(local, off)).drop("_pid")

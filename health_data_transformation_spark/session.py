@@ -5,6 +5,10 @@ Design notes (100 TB target):
   and broadcast demotion/promotion replace hand-tuned partition counts.
 - ``spark.sql.shuffle.partitions`` is a *starting* parallelism; AQE
   coalesces down.  On a real cluster this would be ~2-3x total cores.
+- AQE's coalescing floor (``coalescePartitions.minPartitionSize``)
+  stays at Spark's 1 MiB default: a 128 KiB floor lost the r12
+  interleaved re-measurement on an idle local[32] (q313 min 12.2 s vs
+  9.1 s, 7 of 9 CPU-dense queries worse).
 - Arrow enabled for the (rare) pandas-UDF paths and fast toPandas at the
   display edge.
 - Session time zone pinned to UTC: ``sources.tables`` casts the stored
@@ -57,21 +61,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Floor for AQE partition coalescing: Spark's 1m default, with
-        # an env override.  A 128k default shipped briefly mid-r12: on
-        # a host-steal-loaded box it spread the CPU-dense small-byte
-        # stages (pair expansion, register hashing) and won its A/Bs,
-        # but on an idle local[32] the interleaved re-adjudication
-        # inverted (q313 min 9.1 s at 1m vs 12.2 s at 128k; 7 of 9
-        # CPU-dense queries worse) and two same-code full benches read
-        # 504 s (1m) vs 526 s (128k), the 1m run on the slower canary
-        # window — the extra small tasks cost more in scheduling than
-        # they buy in spread when the cores are real.  Loaded/cluster
-        # profiles can still lower it via the env knob.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"),
-        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")

@@ -889,6 +889,81 @@ def test_global_running_max_partition_invariant(spark, data):
         assert got == expect
 
 
+
+def _has_all_null_slice(df, n, keys, val_col):
+    """True when range-partitioning ``df`` on ``keys`` into ``n`` slices
+    (the layout the prefix scans read) leaves a slice whose
+    ``val_col`` is entirely NULL."""
+    per_slice = (
+        df.repartitionByRange(n, *keys)
+        .groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.count("*").alias("n"), F.count(val_col).alias("nv"))
+        .collect()
+    )
+    return any(r["n"] > 0 and r["nv"] == 0 for r in per_slice)
+
+
+def test_prefix_scans_skip_null_values(spark):
+    """NULL values in ``val_col`` count as nothing: the running sums
+    equal the naive exclusive sums over the non-NULL values, and the
+    running max the naive exclusive max (NULL until a value is seen) —
+    also across a range slice that holds only NULLs, whose collected
+    slice aggregate is NULL."""
+    from health_data_transformation_spark.operators.topk import (
+        global_running_max,
+        global_running_sum,
+        grouped_running_sum,
+    )
+
+    rows = [
+        (k, None if k < 10 or 20 <= k < 25 else (k * 37) % 11 - 3)
+        for k in range(30)
+    ]
+    df = spark.createDataFrame(rows, "k long, v long").repartition(4)
+    sum_before, max_before = {}, {}
+    acc_s, acc_m = 0, None
+    for k, v in rows:
+        sum_before[k], max_before[k] = acc_s, acc_m
+        if v is not None:
+            acc_s += v
+            acc_m = v if acc_m is None or v > acc_m else acc_m
+    for n in (3, 6):
+        assert _has_all_null_slice(df, n, [F.asc("k")], "v")
+        got_s = {
+            r["k"]: r["cum_before"]
+            for r in global_running_sum(
+                df, [F.asc("k")], "v", num_partitions=n
+            ).collect()
+        }
+        assert got_s == sum_before
+        got_m = {
+            r["k"]: r["max_before"]
+            for r in global_running_max(
+                df, [F.asc("k")], "v", num_partitions=n
+            ).collect()
+        }
+        assert got_m == max_before
+
+    nulls = {"a": {0, 2}, "b": {1}}
+    grows = [
+        (g, i, None if i // 5 in nulls[g] else (i * 7 + ord(g)) % 13)
+        for g in ("a", "b")
+        for i in range(15)
+    ]
+    gdf = spark.createDataFrame(grows, "g string, i int, v int").repartition(3)
+    expect, acc = {}, {}
+    for g, i, v in grows:
+        expect[(g, i)] = acc.get(g, 0)
+        acc[g] = acc.get(g, 0) + (v or 0)
+    assert _has_all_null_slice(gdf, 6, [F.asc("g"), F.asc("i")], "v")
+    got = {
+        (r["g"], r["i"]): r["cum_before"]
+        for r in grouped_running_sum(
+            gdf, "g", [F.asc("i")], "v", num_partitions=6
+        ).collect()
+    }
+    assert got == expect
+
 def test_decode_quarantine_split_is_total(spark):
     """decode_quarantine_pipeline emits EXACTLY one row per input
     payload regardless of corruption mix — the P9 totality contract

@@ -16,6 +16,8 @@ shuffle, one pass per loaded table.
 - There is one validation split, and the loaders, the warehouse, the
   snapshot append/write path and the rollup refresh call no
   ``count()``: their row counts come from their writes.
+- No tool or test names a fixed checkout path: each finds the repo
+  from its own file, so run from another checkout it checks that one.
 """
 
 from __future__ import annotations
@@ -23,7 +25,8 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
-PKG = Path(__file__).resolve().parents[1] / "health_data_transformation_spark"
+REPO = Path(__file__).resolve().parents[1]
+PKG = REPO / "health_data_transformation_spark"
 
 
 def _modules():
@@ -158,3 +161,18 @@ def test_loaders_run_no_count():
         and not n.args  # DataFrame.count(), not F.count(col)
     )
     assert [s for s in sites if s[0] in modules or s[:2] in functions] == []
+
+
+def test_tools_and_tests_find_their_own_checkout():
+    """A fixed checkout path in a tool or test makes a run from any other
+    checkout (a parent copy, an A/B worktree) import and check the fixed
+    one's engine instead of its own."""
+    fixed = "/".join(("", "root", "repo"))  # joined so this file passes
+    hits = [
+        f"{path.relative_to(REPO)}:{n}"
+        for top in ("tools", "tests")
+        for path in sorted((REPO / top).rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if fixed in line
+    ]
+    assert not hits, f"fixed checkout path in: {hits}"

@@ -6,8 +6,12 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+TOOLS = str(ROOT / "tools")
+BENCH_DIFF = str(ROOT / "tools" / "bench_diff.py")
+sys.path.insert(0, str(ROOT))
 
 
 def test_registry_names_unique_and_oracled():
@@ -133,7 +137,7 @@ def test_bench_diff_gate(tmp_path):
     # +0.4s absolute -> under the jitter floor, ignored
     new.write_text(json.dumps({"queries": {"a": 3.0, "b": 2.0, "c": 0.5, "d": 9.9}}))
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/bench_diff.py", str(old), str(new)],
+        [sys.executable, BENCH_DIFF, str(old), str(new)],
         capture_output=True, text=True,
     )
     assert proc.returncode == 1
@@ -141,7 +145,7 @@ def test_bench_diff_gate(tmp_path):
     assert "c:" not in proc.stdout.replace("queries", "")
     # same files under a permissive factor -> pass
     proc2 = subprocess.run(
-        [sys.executable, "/root/repo/tools/bench_diff.py", str(old), str(new),
+        [sys.executable, BENCH_DIFF, str(old), str(new),
          "--factor", "4.0"],
         capture_output=True, text=True,
     )
@@ -171,7 +175,7 @@ def test_bench_diff_adjudication(tmp_path):
 
     def run(sessions):
         return subprocess.run(
-            [sys.executable, "/root/repo/tools/bench_diff.py", str(old),
+            [sys.executable, BENCH_DIFF, str(old),
              str(new), "--sessions", str(sessions)],
             capture_output=True, text=True,
         )
@@ -223,7 +227,7 @@ def test_explain_audit_names_exist_in_registry():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "explain_audit", "/root/repo/tools/explain_audit.py"
+        "explain_audit", str(ROOT / "tools" / "explain_audit.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -282,7 +286,7 @@ def test_explain_audit_window_detector():
     with a high-card partition, and the no-ORDER-BY ambiguity case
     (two bracket groups where the second is the PARTITION spec) all
     pass."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from explain_audit import audit_windows
 
     # empty partition over a fact scan -> flagged
@@ -333,7 +337,7 @@ def test_driver_ledger_green_semantics():
     """A row counts as driver-verified only when rows+schema match, no
     err, and hash_match is not explicitly false (absent = rows-only
     check, still a pass)."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from driver_ledger import green
 
     ok = {"rows_match": True, "schema_match": True, "hash_match": True,
@@ -351,7 +355,7 @@ def test_round_gate_artifact_freshness(tmp_path, monkeypatch):
     the exact-match zero-failure case passes."""
     import json as _json
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
 
     def check(artifact_rows, registry):
         arty = set(artifact_rows)
@@ -416,14 +420,14 @@ def test_bench_diff_canary_normalization(tmp_path):
     real.write_text(json.dumps(detail({"a": 6.0, "b": 3.0}, 1.0)))
 
     rc_drift = subprocess.run(
-        [sys.executable, "/root/repo/tools/bench_diff.py", str(old), str(drift)],
+        [sys.executable, BENCH_DIFF, str(old), str(drift)],
         capture_output=True, text=True,
     )
     assert rc_drift.returncode == 0, rc_drift.stdout
     assert "canary drift factor" in rc_drift.stdout
 
     rc_real = subprocess.run(
-        [sys.executable, "/root/repo/tools/bench_diff.py", str(old), str(real)],
+        [sys.executable, BENCH_DIFF, str(old), str(real)],
         capture_output=True, text=True,
     )
     assert rc_real.returncode == 1
@@ -560,7 +564,7 @@ def test_git_code_untracked_content_changes_stamp(tmp_path):
     import subprocess
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(ROOT))
     try:
         from bench import git_code
     finally:
@@ -599,3 +603,36 @@ def test_git_code_untracked_content_changes_stamp(tmp_path):
     # tracked-diff changes still alter the stamp (pre-existing behavior)
     (repo / "a.py").write_text("x = 2\n")
     assert git_code(str(repo)) not in (stamp_a, stamp_b)
+
+
+def test_dump_explain_normalizes_only_run_specific_text():
+    """``dump_explain --against`` compares plans after ``normalize_plan``:
+    two dumps of one plan that differ only in expression ids, exchange
+    and RDD ids, checkpoint attribute lists, commit uuids and temp roots
+    compare equal; a plan with another operator or filter does not."""
+    sys.path.insert(0, TOOLS)
+    from dump_explain import normalize_plan
+
+    def plan(eid, rdd, pid, commit, root, cond="isnotnull(rn#{e})"):
+        return "\n".join([
+            "AdaptiveSparkPlan (3)",
+            "+- Filter (2)",
+            "   +- Scan ExistingRDD (1)",
+            "(1) Scan ExistingRDD",
+            f"Output [2]: [rn#{eid}L, v#{eid + 1}]",
+            f"Arguments: [rn#{eid}L, v#{eid + 1}], MapPartitionsRDD[{rdd}] "
+            "at localCheckpoint at NativeMethodAccessorImpl.java:0, "
+            "ExistingRDD, UnknownPartitioning(0)",
+            f"Condition : {cond.format(e=eid)}",
+            f"Arguments: hashpartitioning(rn#{eid}L, 4), [plan_id={pid}], "
+            f"Subquery subquery#{eid + 9}, [id=#{pid + 1}]",
+            f"Location: InMemoryFileIndex [file:/tmp/hdt_{pid}_{root}/"
+            f"q1_{root}/data/_commit={commit}/assigned]",
+        ])
+
+    a = plan(12, 1050, 311, "000001-append-1a2b3c4d", "k2j3x9")
+    b = plan(4077, 88, 9, "000001-append-ffee0011", "zz81qq")
+    assert normalize_plan(a) == normalize_plan(b)
+    assert "hdt_ROOT/.../assigned" in normalize_plan(a)
+    other = plan(12, 1050, 311, "000001-append-1a2b3c4d", "k2j3x9", cond="true")
+    assert normalize_plan(other) != normalize_plan(a)

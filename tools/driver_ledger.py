@@ -24,7 +24,7 @@ import re
 import sys
 from pathlib import Path
 
-ROOT = Path("/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def round_of(path: str) -> int:

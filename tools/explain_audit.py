@@ -8,10 +8,12 @@ Exit code 1 if a FORBIDDEN join strategy appears in an audited plan.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 #: The audit covers the ENTIRE registry by default (registry-wide
 #: sweep landed in r5: every query's physical plan is gated on the

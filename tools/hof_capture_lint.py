@@ -32,7 +32,7 @@ import ast
 import sys
 from pathlib import Path
 
-ROOT = Path("/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
 SCAN = [
     ROOT / "health_data_transformation_spark",
     ROOT / "__spark_entry__.py",

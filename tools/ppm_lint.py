@@ -31,7 +31,7 @@ import re
 import sys
 from pathlib import Path
 
-ROOT = Path("/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
 SCAN_DIRS = ["health_data_transformation_spark", "tools"]
 SCAN_FILES = ["__spark_entry__.py", "bench.py"]
 

@@ -36,7 +36,7 @@ import subprocess
 import sys
 from pathlib import Path
 
-ROOT = Path("/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def run(cmd: list[str]) -> int:

@@ -32,7 +32,8 @@ import sys
 import time
 import zlib
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import pyspark.sql.functions as F  # noqa: E402
@@ -469,7 +470,6 @@ def measure_cap_recall(spark, dest: str) -> None:
     pair level AND at member level (the number that matters for
     dedup: a doc with zero surviving pairs is never dropped).
     """
-    sys.path.insert(0, "/root/repo")
     from health_data_transformation_spark.operators import dedup as D
     from health_data_transformation_spark.sources.tables import load_table
 
@@ -540,7 +540,6 @@ def measure_prededup_effect(spark, dest: str) -> None:
     the r7 wave measured 0.009% pair / 2.4% member recall for the
     cap-only pipeline on this corpus.
     """
-    sys.path.insert(0, "/root/repo")
     from health_data_transformation_spark.operators import dedup as D
     from health_data_transformation_spark.sources.tables import load_table
 
@@ -627,7 +626,6 @@ def measure_budget_recall_curve(spark, dest: str) -> None:
     pairwise by <= 2 of ~30 tokens (J ~ 0.87), so ideal coverage is
     ~100% whenever their buckets survive the cap.
     """
-    sys.path.insert(0, "/root/repo")
     from health_data_transformation_spark.operators import dedup as D
     from health_data_transformation_spark.sources.tables import load_table
 
@@ -784,7 +782,6 @@ def measure_cap_staleness(spark, dest: str) -> None:
         re-derive on the grown corpus — false-admits return to the
         fresh arm's numbers.
     """
-    sys.path.insert(0, "/root/repo")
     from health_data_transformation_spark.operators import dedup as D
     from health_data_transformation_spark.sources.tables import load_table
 
@@ -899,7 +896,6 @@ def measure_ingest_budget(spark, dest: str) -> None:
     form sizes the threshold from volume and affords the saturated
     buckets iff the stated work allows.
     """
-    sys.path.insert(0, "/root/repo")
     from health_data_transformation_spark.operators import dedup as D
     from health_data_transformation_spark.sources.tables import load_table
 
@@ -1010,7 +1006,6 @@ def measure_store_growth(spark) -> None:
     Store build wall is reported separately — it is paid once per
     corpus delivery (at the corpus's own ingest), not per probe.
     """
-    sys.path.insert(0, "/root/repo")
     from health_data_transformation_spark.operators import dedup as D
     from health_data_transformation_spark.sources.tables import load_table
 
@@ -1166,7 +1161,6 @@ def measure_snapshot_delete(spark) -> None:
     import shutil
     import tempfile
 
-    sys.path.insert(0, "/root/repo")
     from health_data_transformation_spark.snapshots import SnapshotTable
     from health_data_transformation_spark.sources.tables import load_table
 
@@ -1246,7 +1240,6 @@ def measure_snapshot_delete2(spark) -> None:
     import shutil
     import tempfile
 
-    sys.path.insert(0, "/root/repo")
     from health_data_transformation_spark.snapshots import SnapshotTable
     from health_data_transformation_spark.sources.tables import load_table
 
@@ -1327,7 +1320,6 @@ def measure_ivf_balance(spark) -> None:
     the corpus a 4-probe query scans in the WORST case (top-4 cell
     mass), and recall@3 for the 8 q341 anchors vs the exact arm.
     """
-    sys.path.insert(0, "/root/repo")
 
     base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # second dataset: the §8.10 embdup corpus — 40% of vectors in one
@@ -1448,7 +1440,6 @@ def measure_ivf_store(spark) -> None:
     that part is inherent); what the store removes is the PER-QUERY
     rebuild: the corpus-wide assignment shuffle.
     """
-    sys.path.insert(0, "/root/repo")
     from health_data_transformation_spark.operators.similarity import (
         build_ivf_cells,
         build_ivf_store,
@@ -1637,7 +1628,6 @@ def measure_emb_design_limit(spark, dest: str) -> None:
     before/after, whether the cap still fires and on what), plus the
     timed capped+prepassed run.
     """
-    sys.path.insert(0, "/root/repo")
     from health_data_transformation_spark.operators import similarity as S
     from health_data_transformation_spark.sources.tables import load_table
 
