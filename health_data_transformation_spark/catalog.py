@@ -32,10 +32,12 @@ than Spark's parallel partition discovery threshold; that append folds
 the table into one directory (``SnapshotTable.stage_append``).
 
 100 TB notes: the anti-join's existing side reads ONLY the key columns
-(column pruning), but of EVERY partition: a LeftAnti join is not
-eligible for dynamic partition pruning, so the probe's only partition
-filter is ``isnotnull(<partition key>)`` and its cost scales with the
-table history, not the batch.
+(column pruning).  A LeftAnti join gets no dynamic partition pruning,
+so on a partitioned table the append picks the probe's leaves itself:
+one small job finds the batch's partition values, and only the leaves
+the manifest lists for them are handed to Spark.  The probe then costs
+O(batch partitions), not O(history), and a batch of partitions not yet
+stored (a new week) runs no probe at all.
 """
 
 from __future__ import annotations
@@ -106,7 +108,8 @@ class Warehouse:
         changes.  If a publish raises, the tables published before it
         stay committed and the rest are removed.  One load at a time
         per Warehouse; append each table at most once per load (a
-        second append would not see the first one's rows)."""
+        second append would not see the first one's rows).  Appends
+        to different tables may run concurrently inside one load."""
         if self._staged is not None:
             raise RuntimeError("a load is already open on this Warehouse")
         self._staged = staged = []
@@ -125,22 +128,40 @@ class Warehouse:
     ) -> int:
         """First-wins upsert (D4): append the rows whose key is absent.
 
-        Existing side is pruned to key columns but not to partitions:
-        the LeftAnti probe reads the keys of every partition.  Returns
-        the number of rows appended, observed on the write itself.
-        Runs inside ``load()``; the rows become visible when it ends.
+        The existing side is pruned to the key columns and, on a
+        partitioned table, to the stored leaves of the batch's
+        partitions (exact because the partition columns are among the
+        keys).  Returns the number of rows appended, observed on the
+        write itself.  Runs inside ``load()``; the rows become visible
+        when it ends.
         """
         if self._staged is None:
             raise RuntimeError("append_idempotent runs inside Warehouse.load()")
         keys = list(keys or TABLE_KEYS[table])
         t = self.table(table)
+        # a stored row with a batch key lives in a leaf of one of the
+        # batch's partitions only if the partition columns are among
+        # the keys: then those leaves are the whole probe
+        missing = [c for c in t.partition_by or () if c not in keys]
+        if missing:
+            raise ValueError(
+                f"partitioned append requires the partition "
+                f"column(s) {missing!r} among the keys"
+            )
+        existing = None
         if t.current_version():
-            fresh = df.join(self.read(table).select(*keys), keys, "left_anti")
-        else:
-            # first load: anti-joining an empty existing side is a
-            # no-op the optimizer cannot prove (the empty frame is an
-            # RDD scan, not a LocalRelation) — skip the join outright
-            fresh = df
+            if t.partition_by is None:
+                existing = self.read(table)
+            else:
+                touched = t._touched_partitions(df)
+                if t.partition_dirs(touched):
+                    existing = t.read(partitions=touched)
+        # none stored (a first load, a new week): anti-joining an empty
+        # existing side is a no-op the optimizer cannot prove (the
+        # empty frame is an RDD scan, not a LocalRelation) — skip it
+        fresh = df if existing is None else df.join(
+            existing.select(*keys), keys, "left_anti"
+        )
         # one deterministic winner per key *within* the batch as well
         observation = Observation()
         fresh = fresh.dropDuplicates(keys).observe(

@@ -16,10 +16,13 @@ Engine lifecycle: one pass per target table —
 No driver-side loops and no counting jobs: every count in the
 LoadReport is an observation on a write the load makes anyway (the
 first append fills the split's cache and yields input/invalid rows;
-each append yields its own rows added).  The whole load is a handful
-of Spark jobs whose shuffle structure is independent of row count (the
-anti-join probe is the only join; it reads the key columns of every
-target partition).
+each append yields its own rows added; after the first, the HHS
+appends run concurrently).  The whole load is a handful of Spark jobs
+whose shuffle structure is independent of row count (the anti-join
+probe is the only join).  On a partitioned table the probe reads the
+key columns of only the stored leaves of the batch's partitions, and a
+batch of new partitions (a new week) skips it, so a load costs
+O(batch), not O(history).
 """
 
 from __future__ import annotations
@@ -32,6 +35,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
 from .catalog import Warehouse
+from .functions.actions import overlap_actions
 from .operators import cleaning, validate
 from .schemas import BED_METRIC_COLS, HHS_SENTINEL
 from .sources.csv import read_cms_csv, read_hhs_csv
@@ -119,15 +123,20 @@ def load_hhs_frame(raw, warehouse: Warehouse) -> LoadReport:
 
     try:
         with warehouse.load():
-            added = {
-                "hospitals": warehouse.append_idempotent(hospitals, "hospitals"),
-                "hospital_locations": warehouse.append_idempotent(
-                    locations, "hospital_locations"
-                ),
-                "hospital_bed_information": warehouse.append_idempotent(
-                    beds, "hospital_bed_information"
-                ),
-            }
+            # the first append fills the split's cache (and fires its
+            # counts); the other two only read that copy and are
+            # independent, so they run concurrently
+            added = {"hospitals": warehouse.append_idempotent(hospitals, "hospitals")}
+            added["hospital_locations"], added["hospital_bed_information"] = (
+                overlap_actions([
+                    lambda: warehouse.append_idempotent(
+                        locations, "hospital_locations"
+                    ),
+                    lambda: warehouse.append_idempotent(
+                        beds, "hospital_bed_information"
+                    ),
+                ])
+            )
         return _report(split, added, "hospital_bed_information", warehouse, "hhs", t0)
     finally:
         split.flagged.unpersist()

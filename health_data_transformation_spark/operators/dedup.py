@@ -14,10 +14,10 @@ the DuckDB oracle reproduces signatures exactly.
 
 Scale notes:
 - ``dedup_first_wins`` is a single hash-aggregate (map-side combined).
-- ``anti_join_new`` reads every key of the target: a LeftAnti join
-  gets no dynamic partition pruning, so a caller that wants a pruned
-  probe filters the target first (see ``catalog.py``).  Spark/AQE
-  broadcasts the smaller side automatically.
+- ``anti_join_new`` probes the keys of whatever target it is given: a
+  LeftAnti join gets no dynamic partition pruning, so the caller hands
+  it only the partitions the batch touches (``catalog.py`` reads just
+  those leaves).  Spark/AQE broadcasts the smaller side automatically.
 - MinHash banding: r rows x b bands; a pair agreeing on any band
   collides.  The band-bucket groupBy shuffles the *signatures* (tiny),
   never the documents.
@@ -988,7 +988,9 @@ def derive_admission_cap_stats(
     ``(min(cap_budget // n_bands, max bucket size), total rows)`` over
     the store's bucket column (first column is the bucket key by
     builder convention).  Builders call it on a localCheckpointed
-    frame so the signature stage is not re-executed."""
+    frame so the signature stage is not re-executed.  The q181/q338
+    oracles mirror the cap's derivation; the row count is provenance
+    for the staleness guard, not part of the cap."""
     key = buckets.columns[0]
     row = (
         buckets.groupBy(key)
@@ -1002,15 +1004,6 @@ def derive_admission_cap_stats(
     max_size = int(row["mx"]) if row and row["mx"] is not None else 0
     n_rows = int(row["n_rows"]) if row and row["n_rows"] is not None else 0
     return min(cap_budget // max(1, n_bands), max_size), n_rows
-
-
-def derive_admission_cap(
-    buckets: DataFrame, n_bands: int, cap_budget: int
-) -> int:
-    """Cap-only form of :func:`derive_admission_cap_stats` (the q181/
-    q338 oracles mirror THIS derivation; the row count is provenance
-    for the staleness guard, not part of the cap)."""
-    return derive_admission_cap_stats(buckets, n_bands, cap_budget)[0]
 
 
 def _resolve_stored_cap(

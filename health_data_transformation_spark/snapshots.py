@@ -57,7 +57,10 @@ granularity: a commit directory whose partitions are partially
 reused by retained versions loses only its unreferenced leaves.
 Readers never list the table root: ``read`` hands Spark the manifest's
 data directories and Spark lists only those, so planning cost is
-O(directories + files in the snapshot), not O(everything under root).
+O(directories + files in the snapshot), not O(everything under root);
+``read(partitions=...)`` hands it only the leaves of the named
+partitions (the upsert survivor scan and the catalog's append probe),
+so their planning cost does not grow with the table's history.
 Every commit directory is named as a hive level (``_commit=<id>``), so
 on a partitioned table Spark's partition discovery below ``data/``
 reads the partition columns from the leaf paths and a filter on them
@@ -748,14 +751,14 @@ class SnapshotTable:
         if v == 1:
             return self.commit_overwrite(df)
         schema = self._evolve_schema(self._table_schema(v - 1), df.schema)
-        current = self.read()
         if self.partition_by is not None:
             touched = self._touched_partitions(df)
             if not touched:  # empty batch: content-identical version
                 return self._publish_scoped(
                     v, "upsert", schema, {}, set(), df.schema, blind=False
                 )
-            survivors = current.filter(self._touched_filter(touched)).join(
+            # only the touched leaves are read (and listed)
+            survivors = self.read(v - 1, partitions=touched).join(
                 df.select(*keys), list(keys), "left_anti"
             )
             # eager=False (r13): the partitioned write below is the only
@@ -770,7 +773,7 @@ class SnapshotTable:
                 v, "upsert", schema, new_map, touched_keys, df.schema,
                 blind=False,
             )
-        survivors = current.join(df.select(*keys), list(keys), "left_anti")
+        survivors = self.read(v - 1).join(df.select(*keys), list(keys), "left_anti")
         # eager=False: the write is the only consumer (see above)
         merged = survivors.unionByName(
             df, allowMissingColumns=True
@@ -976,11 +979,32 @@ class SnapshotTable:
 
     # -- reads ---------------------------------------------------------------
 
-    def read(self, version: int | None = None) -> DataFrame:
+    def partition_dirs(
+        self, partitions: Sequence[tuple], version: int | None = None
+    ) -> list[str]:
+        """The leaf dirs that ``version`` (default latest) lists for the
+        given partition tuples, from its manifest alone; a tuple the
+        version does not hold adds none."""
+        if self.partition_by is None:
+            raise ValueError(f"table at {self.root} is not partitioned")
+        v = self.current_version() if version is None else version
+        stored = self._prev_partitions(v)
+        return [d for t in partitions for d in stored.get(self._key_of(t), [])]
+
+    def read(
+        self, version: int | None = None, partitions: Sequence[tuple] | None = None
+    ) -> DataFrame:
         """Snapshot-isolated read; ``version`` pins a historical state
         (time travel), default = latest.  A partitioned table's
         partition columns come from the leaf paths, so a filter on them
-        reaches the scan as a partition filter."""
+        reaches the scan as a partition filter.
+
+        ``partitions`` (partition tuples, partitioned tables only)
+        reads just the leaves the manifest lists for them
+        (``partition_dirs``): Spark is handed and lists only those, so
+        up to the parallel partition discovery threshold a read of a
+        few partitions runs no listing job however long the history.
+        If the version holds none of them the result has no rows."""
         v = self.current_version() if version is None else version
         if v < 1:
             raise ValueError(f"no snapshots in {self.root}")
@@ -988,8 +1012,15 @@ class SnapshotTable:
             raise ValueError(
                 f"version {v} is beyond the vacuum retention horizon"
             )
-        dirs = self._read_manifest(v)["dirs"]
         schema = self._table_schema(v)
+        if partitions is None:
+            dirs = self._read_manifest(v)["dirs"]
+        else:
+            dirs = self.partition_dirs(partitions, v)
+            if not dirs:
+                return self.spark.createDataFrame(
+                    self.spark.sparkContext.emptyRDD(), schema
+                )
         reader = self.spark.read
         path_cols = dict(zip(self._pcols, self._path_keys())) if self._pcols else {}
         if path_cols:

@@ -291,7 +291,7 @@ def stream_embedding_admission(
     batch-independent, so admission is stateless given the store and
     the union over ANY arrival granularity EQUALS the batch result.
     Since r11 the cap is DERIVED at build time
-    (``dedup.derive_admission_cap``: min(cap_budget, max corpus bucket
+    (``dedup.derive_admission_cap_stats``: min(cap_budget, max corpus bucket
     size) for this 1-band store) and stamped in the store's footer
     metadata — §8.11b/§8.11c measured the previous hard-coded constant
     failing OPEN as buckets outgrow it — and the probe reads the stamp

@@ -5,9 +5,35 @@ Each assertion cites the reference behavior it preserves.
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+import threading
+
 import pyspark.sql.functions as F
 
 from health_data_transformation_spark.ingest import load_hhs, load_quality
+
+
+def counts(report):
+    """Everything a LoadReport counts."""
+    return (
+        report.table_rows_added, report.input_rows, report.invalid_rows,
+        report.duplicate_rows,
+    )
+
+
+def unpublished_commits(warehouse, table: str) -> set[str]:
+    """``_commit=`` dirs under the table's ``data/`` that no retained
+    manifest lists."""
+    t = warehouse.table(table)
+    data = os.path.join(t.root, "data")
+    on_disk = set(os.listdir(data)) if os.path.isdir(data) else set()
+    listed = {
+        os.path.relpath(d, data).split(os.sep)[0]
+        for m in t.history()
+        for d in m["dirs"]
+    }
+    return on_disk - listed
 
 
 def test_load_hhs_golden(spark, warehouse, hhs_csv_1):
@@ -118,9 +144,6 @@ def test_failed_load_changes_no_table(
     def contents(wh):
         return {t: sorted(map(tuple, wh.read(t).collect())) for t in TABLE_SCHEMAS}
 
-    def report(r):
-        return (r.table_rows_added, r.input_rows, r.invalid_rows, r.duplicate_rows)
-
     uninterrupted = Warehouse(spark, str(tmp_path / "uninterrupted"))
     load_hhs(spark, hhs_csv_1, uninterrupted)
     want = load_hhs(spark, hhs_csv_2, uninterrupted)
@@ -142,7 +165,32 @@ def test_failed_load_changes_no_table(
             load_hhs(spark, hhs_csv_2, warehouse)
         monkeypatch.undo()
         assert contents(warehouse) == before
-    assert report(load_hhs(spark, hhs_csv_2, warehouse)) == report(want)
+
+    # the beds write fails while the locations write (run concurrently
+    # with it) is still in flight: the locations write finishes, and
+    # its data goes with the rest of the load's
+    before = contents(warehouse)
+    beds_failed = threading.Event()
+
+    def fail_beds_during_locations(self, path, *args, **kwargs):
+        if "/hospital_locations/" in path:
+            assert beds_failed.wait(60), "the two appends did not overlap"
+        elif "/hospital_bed_information/" in path:
+            try:
+                write(self, path, *args, **kwargs)
+                raise RuntimeError("injected fault after the write")
+            finally:
+                beds_failed.set()
+        write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", fail_beds_during_locations)
+    with pytest.raises(RuntimeError, match="injected fault"):
+        load_hhs(spark, hhs_csv_2, warehouse)
+    monkeypatch.undo()
+    assert contents(warehouse) == before
+    for t in ("hospital_locations", "hospital_bed_information"):
+        assert unpublished_commits(warehouse, t) == set()
+    assert counts(load_hhs(spark, hhs_csv_2, warehouse)) == counts(want)
     assert contents(warehouse) == contents(uninterrupted)
 
 
@@ -422,3 +470,152 @@ def test_loads_that_add_no_rows_add_no_files(
     load_hhs(spark, hhs_csv_1, warehouse)
     load_quality(spark, cms_csv_1, "2022-10-01", warehouse)
     assert listing() == loaded
+
+
+# -- weekly loads against a history longer than Spark's parallel
+# partition discovery threshold (32 paths) --------------------------------
+
+HISTORY_WEEKS = [dt.date(2022, 1, 7) + dt.timedelta(weeks=i) for i in range(34)]
+
+
+def hhs_rows(rows) -> list[str]:
+    """HHS lines for (hospital_pk, collection_week, adult beds) rows."""
+    from tests.conftest import HHS_HEADER
+
+    return [HHS_HEADER] + [
+        f'{pk},Hospital {pk},PA,1 Main St,Pittsburgh,15213,42003,'
+        f'"POINT (-79.9 40.4)",{week},{beds},10,50,5,20,10,8,3,x'
+        for pk, week, beds in rows
+    ]
+
+
+def load_rows(spark, warehouse, tmp_path, name, rows):
+    from tests.conftest import write_lines
+
+    return load_hhs(spark, write_lines(str(tmp_path / name), hhs_rows(rows)), warehouse)
+
+
+def load_history(spark, warehouse, tmp_path, weeks=HISTORY_WEEKS):
+    """H1 and H2 in every week of ``weeks``: one leaf per week."""
+    load_rows(
+        spark, warehouse, tmp_path, "history.csv",
+        [(pk, w, 100) for w in weeks for pk in ("H1", "H2")],
+    )
+
+
+class ParquetReads:
+    """Spy on the paths every ``spark.read...parquet`` call hands Spark."""
+
+    def __init__(self, monkeypatch):
+        from pyspark.sql.readwriter import DataFrameReader
+
+        self.paths: list[str] = []
+        read = DataFrameReader.parquet
+
+        def spy(reader, *paths, **kwargs):
+            self.paths.extend(paths)
+            return read(reader, *paths, **kwargs)
+
+        monkeypatch.setattr(DataFrameReader, "parquet", spy)
+
+    def under(self, root: str) -> list[str]:
+        return [p for p in self.paths if p.startswith(root + os.sep)]
+
+
+def stage_task_counts(spark, run) -> list[int]:
+    """Tasks of every stage the jobs launched by ``run()`` ran."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup())
+    run()
+    bus.waitUntilEmpty()
+    return [
+        tracker.getStageInfo(sid).numTasks
+        for jid in set(tracker.getJobIdsForGroup()) - before
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    ]
+
+
+def test_new_week_load_probes_no_stored_week(
+    spark, warehouse, tmp_path, monkeypatch
+):
+    """A new week's load reads no leaf of the bed table: the probe has
+    no stored leaf of the batch's week to read, so Spark lists none of
+    the other weeks' leaves (past 32 paths that listing is a job of one
+    task per leaf)."""
+    load_history(spark, warehouse, tmp_path)
+    beds = warehouse.table("hospital_bed_information")
+    n_leaves = len(beds.manifest(beds.current_version())["dirs"])
+    assert n_leaves == len(HISTORY_WEEKS) > 32
+
+    reads = ParquetReads(monkeypatch)
+    new_week = HISTORY_WEEKS[-1] + dt.timedelta(weeks=1)
+    reports = []
+    tasks = stage_task_counts(spark, lambda: reports.append(load_rows(
+        spark, warehouse, tmp_path, "new_week.csv",
+        [("H1", new_week, 1), ("H2", new_week, 2)],
+    )))
+    assert reports[0].table_rows_added == {
+        "hospitals": 0, "hospital_locations": 0, "hospital_bed_information": 2,
+    }
+    assert reads.under(beds.root) == []
+    assert tasks and max(tasks) < n_leaves
+
+
+def test_batch_over_a_stored_and_a_new_week(spark, tmp_path, monkeypatch):
+    """A two-week batch whose first week is stored probes only that
+    week's leaves, adds exactly the absent keys, and reports what a
+    warehouse holding just the stored week reports."""
+    from health_data_transformation_spark.catalog import Warehouse
+
+    stored, new_week = HISTORY_WEEKS[5], HISTORY_WEEKS[-1] + dt.timedelta(weeks=1)
+    batch = [
+        ("H1", stored, 999),  # already stored: first wins
+        ("H3", stored, 30),
+        ("H1", new_week, 1),
+        ("H2", new_week, 2),
+    ]
+    fresh = Warehouse(spark, str(tmp_path / "fresh"))
+    load_history(spark, fresh, tmp_path, weeks=[stored])
+    want = load_rows(spark, fresh, tmp_path, "batch.csv", batch)
+
+    long = Warehouse(spark, str(tmp_path / "long"))
+    load_history(spark, long, tmp_path)
+    beds = long.table("hospital_bed_information")
+    reads = ParquetReads(monkeypatch)
+    got = load_rows(spark, long, tmp_path, "batch.csv", batch)
+    monkeypatch.undo()
+    assert counts(got) == counts(want)
+    assert got.table_rows_added["hospital_bed_information"] == 3
+    probed = reads.under(beds.root)
+    assert probed and all(f"_pt={stored}" in p for p in probed)
+    rows = {
+        (r.hospital_fk, r.collection_week): r.all_adult_hospital_beds_7_day_avg
+        for r in long.read("hospital_bed_information").collect()
+    }
+    assert len(rows) == 2 * len(HISTORY_WEEKS) + 3
+    assert rows[("H1", stored)] == 100
+    assert {k for k in rows if k[1] == new_week or k[0] == "H3"} == {
+        ("H3", stored), ("H1", new_week), ("H2", new_week),
+    }
+
+
+def test_null_partition_key_raises_and_leaves_no_dir(spark, warehouse, tmp_path):
+    """A NULL collection_week cannot name a leaf: the append raises
+    ValueError and the table keeps no dir of it."""
+    import pytest
+
+    load_history(spark, warehouse, tmp_path)
+    beds = warehouse.table("hospital_bed_information")
+    version = beds.current_version()
+    bad = warehouse.read("hospital_bed_information").limit(1).withColumn(
+        "collection_week", F.lit(None).cast("date")
+    )
+    with pytest.raises(ValueError, match="NULL"):
+        with warehouse.load():
+            warehouse.append_idempotent(bad, "hospital_bed_information")
+    assert beds.current_version() == version
+    assert unpublished_commits(warehouse, "hospital_bed_information") == set()

@@ -1,0 +1,116 @@
+"""How a weekly load's cost grows with the warehouse's history (ad hoc).
+
+Runs perfbench's ``weekly_load`` workload with its warehouse seeded
+with 36, 72 and 144 weeks of history instead of its fixed 36, one fresh
+Spark process per length, and prints per-load seconds, Spark jobs and
+tasks for the timed loads, by kind (``hhs`` is a new week, ``redeliver``
+an earlier week again, ``cms`` a quality snapshot), and each table's
+parquet file count after them.  The benchmark itself is unchanged; this
+only reuses its data generator, model checks and job counter.
+
+    python tools/history_sweep.py [--weeks 36 72 144] [--ops 10] [--seed 1]
+
+Every load's report is checked against the model as in the benchmark; a
+mismatch is printed and makes the exit status non-zero.  The 144-week
+set-up loads ~720k backfill rows and takes a few minutes on 4 cores.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import shutil
+import subprocess
+import sys
+import time
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(REPO / "perfbench"))
+
+
+def one(weeks: int, ops: int, seed: int) -> dict:
+    """Set up ``weekly_load`` over ``weeks`` of history and run ``ops``
+    timed ops in this process; per-load records of the timed loads."""
+    import run as bench
+    from measure import JobCounter, Tracer
+    from workloads import Context, WeeklyLoad, table_files
+
+    class Sweep(WeeklyLoad):
+        HISTORY_WEEKS = weeks
+
+    run_dir = bench.new_run_dir()
+    workload = Sweep(seed)
+    spark = None
+    try:
+        workload.prepare()
+        spark, _ = bench.start_session(run_dir)
+        jobs = JobCounter(spark.sparkContext.statusTracker(), bench.listener_drain(spark))
+        ctx = Context(spark, run_dir, Tracer(True), jobs)
+        workload.setup(ctx)
+        bench.settle(spark)
+        jobs.take()
+        problems = list(ctx.problems)
+        for j in range(ops):
+            res = workload.op(j)
+            if not res.ok:
+                problems.append(res.detail)
+        files = table_files(run_dir)
+    finally:
+        if spark is not None:
+            bench.stop_session(spark)
+        shutil.rmtree(run_dir, ignore_errors=True)
+    loads = [
+        {"kind": r.kind, "load_s": r.load_s, "jobs": r.work.jobs, "tasks": r.work.tasks}
+        for r in ctx.loads
+        if r.op is not None
+    ]
+    return {"weeks": weeks, "loads": loads, "files": files, "problems": problems}
+
+
+def main(argv=None) -> int:
+    p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    p.add_argument("--weeks", type=int, nargs="+", default=[36, 72, 144])
+    p.add_argument("--ops", type=int, default=10, help="timed ops per history length")
+    p.add_argument("--seed", type=int, default=1)
+    p.add_argument("--one", type=int, help=argparse.SUPPRESS)
+    args = p.parse_args(argv)
+    from measure import median
+
+    if args.one is not None:
+        print(json.dumps(one(args.one, args.ops, args.seed)))
+        return 0
+
+    print(f"{'weeks':>5} {'kind':<9} {'loads':>5} {'load_s':>7} {'jobs':>5} {'tasks':>6}")
+    bad = 0
+    for weeks in args.weeks:
+        t0 = time.perf_counter()
+        out = subprocess.run(
+            [sys.executable, __file__, "--one", str(weeks),
+             "--ops", str(args.ops), "--seed", str(args.seed)],
+            check=True, stdout=subprocess.PIPE, text=True, cwd=REPO,
+        ).stdout
+        res = json.loads(out.strip().splitlines()[-1])
+        by_kind: dict[str, list[dict]] = {"all": res["loads"]}
+        for rec in res["loads"]:
+            by_kind.setdefault(rec["kind"], []).append(rec)
+        for kind, recs in by_kind.items():
+            print(
+                f"{weeks:>5} {kind:<9} {len(recs):>5} "
+                f"{median([r['load_s'] for r in recs]):>7.3f} "
+                f"{median([r['jobs'] for r in recs]):>5.1f} "
+                f"{median([r['tasks'] for r in recs]):>6.1f}"
+            )
+        print(f"{weeks:>5} files    {res['files']}")
+        for problem in res["problems"]:
+            print(f"{weeks:>5} PROBLEM {problem}")
+        bad += len(res["problems"])
+        print(f"{weeks:>5} (process {time.perf_counter() - t0:.0f} s)", file=sys.stderr)
+    return 1 if bad else 0
+
+
+if __name__ == "__main__":
+    os.chdir(REPO)
+    sys.exit(main())
