@@ -49,6 +49,7 @@ from contextlib import contextmanager
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 
+from .functions.sqltext import with_columns
 from .schemas import TABLE_KEYS, TABLE_PARTITIONS, TABLE_SCHEMAS
 from .snapshots import SnapshotTable, Staged
 
@@ -193,7 +194,7 @@ class Warehouse:
         mirroring invalid_data/*.csv (load_hhs.py:153-155)."""
         out = df
         if "_failed_rules" in df.columns:
-            out = df.withColumn("_failed_rules", F.concat_ws(";", "_failed_rules"))
+            out = with_columns(df, {"_failed_rules": "concat_ws(';', _failed_rules)"})
         (
             out.write.mode("append")
             .option("header", True)

@@ -13,6 +13,10 @@ Engine lifecycle: one pass per target table —
   file load, load_hhs.py:148: a load that fails in any write changes
   no table, and its retry reports what an uninterrupted load would);
   then quarantine + load report.
+The plan is built one ``selectExpr`` per step, over SQL text (the
+typed read, each cleaning step, the split's verdicts, each table's
+projection): a ``Column`` per field would cost several JVM calls each,
+and a weekly load's driver time went mostly to building its plan.
 No driver-side loops and no counting jobs: every count in the
 LoadReport is an observation on a write the load makes anyway (the
 first append fills the split's cache and yields input/invalid rows;
@@ -31,8 +35,7 @@ import logging
 import time
 from dataclasses import dataclass, field
 
-import pyspark.sql.functions as F
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import Warehouse
 from .functions.actions import overlap_actions
@@ -44,6 +47,37 @@ from .sources.csv import read_cms_csv, read_hhs_csv
 #: structured logging around Spark actions (the reference logs via its
 #: local logging_module, load_quality.py:7,73,145-146)
 logger = logging.getLogger("health_data_transformation_spark.ingest")
+
+HHS_RULES = validate.non_negative(BED_METRIC_COLS) + validate.not_null(
+    ["hospital_pk", "hospital_name", "collection_week"]
+)
+
+#: each HHS table's projection of the valid rows
+HHS_TABLES = {
+    "hospitals": ["hospital_pk", "hospital_name"],
+    "hospital_locations": [
+        "hospital_pk AS hospital_fk", "state", "address", "city", "zip",
+        "fips_code", "geocoded_hospital_address",
+    ],
+    "hospital_bed_information": [
+        "hospital_pk AS hospital_fk", "collection_week", *BED_METRIC_COLS,
+    ],
+}
+
+QUALITY_RULES = [
+    validate.Rule(
+        "rating_non_negative",
+        "hospital_overall_rating >= 0",
+        null_passing_cols=("hospital_overall_rating",),
+    ),
+    # a NULL data_date is quarantined: it cannot name a partition
+    *validate.not_null(["facility_id", "data_date"]),
+]
+
+QUALITY_COLUMNS = [
+    "facility_id", "hospital_type", "hospital_ownership",
+    "emergency_services", "hospital_overall_rating", "data_date",
+]
 
 
 @dataclass
@@ -97,43 +131,39 @@ def load_hhs(spark: SparkSession, csv_path: str, warehouse: Warehouse) -> LoadRe
     return load_hhs_frame(read_hhs_csv(spark, csv_path), warehouse)
 
 
+def hhs_plan(raw: DataFrame) -> tuple[validate.Split, dict[str, DataFrame]]:
+    """The HHS load's frames, built without running a Spark job: the
+    cleaned batch's split and each table's projection of its valid
+    rows."""
+    cleaned = cleaning.replace_sentinel(raw, BED_METRIC_COLS, HHS_SENTINEL)
+    cleaned = cleaning.parse_dates(cleaned, ["collection_week"])
+    split = validate.split_valid(cleaned, HHS_RULES)
+    return split, {t: split.valid.selectExpr(*cols) for t, cols in HHS_TABLES.items()}
+
+
 def load_hhs_frame(raw, warehouse: Warehouse) -> LoadReport:
     """Frame-level HHS loader: shared by the batch CSV path and the
     Structured Streaming foreachBatch path (streaming/ingest.py)."""
     t0 = time.time()
-    cleaned = cleaning.replace_sentinel(raw, BED_METRIC_COLS, HHS_SENTINEL)
-    cleaned = cleaning.parse_dates(cleaned, ["collection_week"])
-
-    rules = validate.non_negative(BED_METRIC_COLS) + validate.not_null(
-        ["hospital_pk", "hospital_name", "collection_week"]
-    )
     # one input scan total: the first append fills the cached, observed
     # flagged frame (and so yields the split's counts); the other
     # appends and the quarantine read that copy
-    split = validate.split_valid(cleaned, rules)
-    valid = split.valid
-    hospitals = valid.select("hospital_pk", "hospital_name")
-    locations = valid.select(
-        F.col("hospital_pk").alias("hospital_fk"),
-        "state", "address", "city", "zip", "fips_code", "geocoded_hospital_address",
-    )
-    beds = valid.select(
-        F.col("hospital_pk").alias("hospital_fk"), "collection_week", *BED_METRIC_COLS
-    )
-
+    split, tables = hhs_plan(raw)
     try:
         with warehouse.load():
             # the first append fills the split's cache (and fires its
             # counts); the other two only read that copy and are
             # independent, so they run concurrently
-            added = {"hospitals": warehouse.append_idempotent(hospitals, "hospitals")}
+            added = {"hospitals": warehouse.append_idempotent(
+                tables["hospitals"], "hospitals"
+            )}
             added["hospital_locations"], added["hospital_bed_information"] = (
                 overlap_actions([
                     lambda: warehouse.append_idempotent(
-                        locations, "hospital_locations"
+                        tables["hospital_locations"], "hospital_locations"
                     ),
                     lambda: warehouse.append_idempotent(
-                        beds, "hospital_bed_information"
+                        tables["hospital_bed_information"], "hospital_bed_information"
                     ),
                 ])
             )
@@ -160,12 +190,10 @@ def load_quality(
     return load_quality_frame(raw, warehouse)
 
 
-def load_quality_frame(raw, warehouse: Warehouse) -> LoadReport:
-    """Frame-level quality loader: ``raw`` carries the original CMS
-    headers plus an attached ``data_date`` DATE column (stamped from the
-    CLI arg in batch mode, derived from the landing filename in the
-    streaming path, streaming/ingest.py)."""
-    t0 = time.time()
+def quality_plan(raw: DataFrame) -> tuple[validate.Split, DataFrame]:
+    """The quality load's frames, built without running a Spark job:
+    the cleaned batch's split and the table's projection of its valid
+    rows."""
     df = cleaning.normalize_headers(raw)
     df = cleaning.map_values(df, "hospital_overall_rating", {"Not Available": "0"})
     df = cleaning.cast_columns(df, {"hospital_overall_rating": "double"})
@@ -173,29 +201,21 @@ def load_quality_frame(raw, warehouse: Warehouse) -> LoadReport:
         df, "emergency_services", {"Yes": True, "No": False}, otherwise="null"
     )
     df = cleaning.cast_columns(df, {"emergency_services": "boolean"})
+    split = validate.split_valid(df, QUALITY_RULES)
+    return split, split.valid.selectExpr(*QUALITY_COLUMNS)
 
-    rules = [
-        validate.Rule(
-            "rating_non_negative",
-            F.col("hospital_overall_rating") >= 0,
-            null_passing_cols=("hospital_overall_rating",),
-        ),
-        # a NULL data_date is quarantined: it cannot name a partition
-        *validate.not_null(["facility_id", "data_date"]),
-    ]
-    split = validate.split_valid(df, rules)
+
+def load_quality_frame(raw, warehouse: Warehouse) -> LoadReport:
+    """Frame-level quality loader: ``raw`` carries the original CMS
+    headers plus an attached ``data_date`` DATE column (stamped from the
+    CLI arg in batch mode, derived from the landing filename in the
+    streaming path, streaming/ingest.py)."""
+    t0 = time.time()
+    split, quality = quality_plan(raw)
+    table = "hospital_quality_information"
     try:
         with warehouse.load():
-            added = warehouse.append_idempotent(
-                split.valid.select(
-                    "facility_id", "hospital_type", "hospital_ownership",
-                    "emergency_services", "hospital_overall_rating", "data_date",
-                ),
-                "hospital_quality_information",
-            )
-        return _report(
-            split, {"hospital_quality_information": added},
-            "hospital_quality_information", warehouse, "quality", t0,
-        )
+            added = warehouse.append_idempotent(quality, table)
+        return _report(split, {table: added}, table, warehouse, "quality", t0)
     finally:
         split.flagged.unpersist()

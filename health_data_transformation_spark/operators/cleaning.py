@@ -1,7 +1,9 @@
 """Cleaning / normalization operators (SURVEY.md §2.2, P1-P8, P13).
 
-Replaces the reference's pandas mutations with lazy, codegen-friendly
-column expressions:
+Replaces the reference's pandas mutations with lazy SQL projections,
+each rendered as SQL text and applied in one ``selectExpr``
+(``functions/sqltext.py``: no per-column ``Column`` objects, which
+cost several JVM calls each at build time):
 - sentinel -> NULL            (/root/reference/load_hhs.py:49)
 - NaN -> NULL                 (/root/reference/load_hhs.py:50 — automatic in Spark)
 - value maps                  (/root/reference/load_quality.py:103,105)
@@ -21,6 +23,8 @@ from collections.abc import Mapping, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..functions.sqltext import ident, literal, with_columns
+
 
 def normalize_headers(df: DataFrame) -> DataFrame:
     """lowercase + spaces->underscores on every column name."""
@@ -29,11 +33,9 @@ def normalize_headers(df: DataFrame) -> DataFrame:
 
 def replace_sentinel(df: DataFrame, columns: Sequence[str], sentinel: float) -> DataFrame:
     """Map a numeric 'suppressed' sentinel (e.g. -999999) to NULL."""
-    exprs = {
-        c: F.when(F.col(c) == F.lit(sentinel), F.lit(None)).otherwise(F.col(c))
-        for c in columns
-    }
-    return df.withColumns(exprs)
+    return with_columns(
+        df, {c: f"nullif({ident(c)}, {literal(sentinel)})" for c in columns}
+    )
 
 
 def map_values(df: DataFrame, column: str, mapping: Mapping[str, object], otherwise: str = "keep") -> DataFrame:
@@ -41,25 +43,25 @@ def map_values(df: DataFrame, column: str, mapping: Mapping[str, object], otherw
 
     otherwise: 'keep' passes unmapped values through; 'null' nulls them.
     """
-    expr = None
-    for src, dst in mapping.items():
-        cond = F.col(column) == F.lit(src)
-        expr = F.when(cond, F.lit(dst)) if expr is None else expr.when(cond, F.lit(dst))
-    if expr is None:
+    if not mapping:
         return df
-    expr = expr.otherwise(F.col(column) if otherwise == "keep" else F.lit(None))
-    return df.withColumn(column, expr)
+    c = ident(column)
+    whens = " ".join(
+        f"WHEN {c} = {literal(src)} THEN {literal(dst)}" for src, dst in mapping.items()
+    )
+    rest = c if otherwise == "keep" else "NULL"
+    return with_columns(df, {column: f"CASE {whens} ELSE {rest} END"})
 
 
 def cast_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
     """Lenient cast: NULL on malformed input, like
     pd.to_numeric(errors='coerce').  Must be try_cast — under Spark 4's
     default ANSI mode a plain cast *throws* on bad input."""
-    return df.withColumns({c: F.col(c).try_cast(t) for c, t in casts.items()})
+    return with_columns(df, {c: f"try_cast({ident(c)} AS {t})" for c, t in casts.items()})
 
 
 def parse_dates(df: DataFrame, columns: Sequence[str], fmt: str = "yyyy-MM-dd") -> DataFrame:
-    return df.withColumns({c: F.to_date(F.col(c), fmt) for c in columns})
+    return with_columns(df, {c: f"to_date({ident(c)}, {literal(fmt)})" for c in columns})
 
 
 def parse_point(df: DataFrame, column: str, out_col: str = "geo") -> DataFrame:
@@ -85,7 +87,5 @@ def parse_point(df: DataFrame, column: str, out_col: str = "geo") -> DataFrame:
 
 
 def stamp_literal(df: DataFrame, column: str, value, dtype: str | None = None) -> DataFrame:
-    col = F.lit(value)
-    if dtype:
-        col = col.cast(dtype)
-    return df.withColumn(column, col)
+    value = literal(value)
+    return with_columns(df, {column: f"CAST({value} AS {dtype})" if dtype else value})

@@ -18,6 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from ..functions.vector import dot, norm
+from .dedup import _cap_buckets
 
 
 def _with_query(df: DataFrame, query: DataFrame, vec_col: str) -> DataFrame:
@@ -777,18 +778,7 @@ def embedding_lsh_pairs(
     sigs = embedding_lsh_signature(df, n_planes, vec_col, dim).select(
         id_col, "lsh_sig", int8_quantize(vec_col).alias("_q")
     )
-    if max_bucket is not None:
-        # windowed count, not groupBy+join-back: one shuffle on the
-        # same key the pair join needs anyway (dedup._cap_buckets'
-        # measured shape)
-        sizes = Window.partitionBy("lsh_sig")
-        sigs = (
-            sigs.withColumn("_sn", F.count("*").over(sizes))
-            .filter(F.col("_sn") <= max_bucket)
-            .drop("_sn")
-        )
-    if pair_budget is not None:
-        sigs = apply_pair_budget(sigs, "lsh_sig", pair_budget)
+    sigs = _cap_buckets(sigs, max_bucket, pair_budget, key="lsh_sig")
     a = sigs.select(
         F.col("lsh_sig"), F.col(id_col).alias("id_a"), F.col("_q").alias("qa")
     )

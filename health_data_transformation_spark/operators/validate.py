@@ -9,11 +9,15 @@ pattern the reference implements imperatively by collecting
 ``invalid_row_ind`` and re-writing those rows
 (/root/reference/load_hhs.py:152-155).
 
-NULL semantics follow the reference: NULL *passes* a bound check (the
-``pd.isna`` short-circuit at load_hhs.py:104), so bounds are expressed
-as ``isNull() | predicate`` over their ``null_passing_cols``.  Any other
-NULL verdict fails its rule: every row lands in exactly one of
-``valid`` and ``invalid``, and ``_failed_rules`` names the rule.
+Rules are SQL text, and a split is built from two ``selectExpr``s (one
+adds ``_ok``, one adds ``_failed_rules``), not from per-rule ``Column``
+objects.  NULL semantics follow the reference: NULL *passes* a bound
+check (the ``pd.isna`` short-circuit at load_hhs.py:104), so a rule's
+verdict is written as ``coalesce(c IS NULL OR (<predicate>), false)``
+over its ``null_passing_cols``.  Any other NULL verdict fails its rule:
+every row lands in exactly one of ``valid`` and ``invalid``, and
+``_failed_rules`` names the rule.  A predicate that names a missing
+column raises when the split is built.
 
 Scale note: `split_valid` evaluates the rules once per row into a
 cached, observed frame.  The first action over either side (the
@@ -26,41 +30,42 @@ job runs.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import reduce
-from operator import and_
 from collections.abc import Sequence
 from typing import NamedTuple
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame, Observation
+
+from ..functions.sqltext import ident, literal
 
 
 @dataclass
 class Rule:
-    """A named validation predicate.  NULL in a ``null_passing_cols``
-    column passes; any other NULL verdict fails the rule."""
+    """A named validation predicate in SQL text (``"`v` >= 0"``).  NULL
+    in a ``null_passing_cols`` column passes; any other NULL verdict
+    fails the rule."""
 
     name: str
-    predicate: Column
+    predicate: str
     null_passing_cols: Sequence[str] = field(default_factory=tuple)
 
-    def as_column(self) -> Column:
-        pred = self.predicate
-        for c in self.null_passing_cols:
-            pred = F.col(c).isNull() | pred
-        return F.coalesce(pred, F.lit(False))
+    def verdict(self) -> str:
+        """The rule's verdict per row as SQL text: true or false, never
+        NULL."""
+        passing = "".join(f"{ident(c)} IS NULL OR " for c in self.null_passing_cols)
+        return f"coalesce({passing}({self.predicate}), false)"
 
 
 def non_negative(columns: Sequence[str]) -> list[Rule]:
     """One rule per metric column: NULL or >= 0 (load_hhs.py:104-127)."""
     return [
-        Rule(name=f"{c}_non_negative", predicate=F.col(c) >= 0, null_passing_cols=(c,))
+        Rule(name=f"{c}_non_negative", predicate=f"{ident(c)} >= 0", null_passing_cols=(c,))
         for c in columns
     ]
 
 
 def not_null(columns: Sequence[str]) -> list[Rule]:
-    return [Rule(name=f"{c}_not_null", predicate=F.col(c).isNotNull()) for c in columns]
+    return [Rule(name=f"{c}_not_null", predicate=f"{ident(c)} IS NOT NULL") for c in columns]
 
 
 class Split(NamedTuple):
@@ -86,23 +91,23 @@ def split_valid(df: DataFrame, rules: Sequence[Rule]) -> Split:
     rule — richer than the reference's raw quarantine CSV while still
     containing the original row verbatim.
     """
-    combined = reduce(and_, (r.as_column() for r in rules), F.lit(True))
+    verdicts = [r.verdict() for r in rules]
     observation = Observation()
     flagged = (
-        df.withColumn("_ok", combined)
+        df.selectExpr("*", f"{' AND '.join(verdicts) or 'true'} AS _ok")
         .observe(
             observation,
-            F.count(F.lit(1)).alias("input_rows"),
-            F.count_if(~F.col("_ok")).alias("invalid_rows"),
+            F.expr("count(1) AS input_rows"),
+            F.expr("count_if(NOT _ok) AS invalid_rows"),
         )
         .cache()
     )
-    failed = F.filter(
-        F.array(*[F.when(~r.as_column(), F.lit(r.name)) for r in rules]),
-        lambda x: x.isNotNull(),
+    failed = ", ".join(
+        f"CASE WHEN NOT {v} THEN {literal(r.name)} END" for r, v in zip(rules, verdicts)
     )
-    valid = flagged.filter(F.col("_ok")).drop("_ok")
-    invalid = flagged.filter(~F.col("_ok")).drop("_ok").withColumn(
-        "_failed_rules", failed
+    valid = flagged.filter("_ok").drop("_ok")
+    invalid = flagged.filter("NOT _ok").selectExpr(
+        *[ident(c) for c in df.columns],
+        f"filter(array({failed}), x -> x IS NOT NULL) AS _failed_rules",
     )
     return Split(valid, invalid, flagged, observation)

@@ -83,6 +83,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
+from .functions.sqltext import ident
+
 
 class SnapshotConflict(RuntimeError):
     """Another committer published this version first; retry on top."""
@@ -1039,4 +1041,4 @@ class SnapshotTable:
             return df
         # one selectExpr: a Column per field costs a JVM call each
         keep = [c for c in (schema or df.schema).names if c != "_commit" and c not in path_cols.values()]
-        return df.selectExpr(*[f"`{path_cols.get(c, c)}` AS `{c}`" for c in keep])
+        return df.selectExpr(*[f"{ident(path_cols.get(c, c))} AS {ident(c)}" for c in keep])

@@ -12,39 +12,40 @@ kept lazily — no second file read.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.sqltext import ident
 from ..schemas import CMS_RAW_COLUMNS, HHS_RAW_SCHEMA
 
 
 def read_hhs_csv(spark: SparkSession, path: str) -> DataFrame:
     """Weekly HHS CSV: declared columns only, metrics as double
     (Spark cast-to-null == pandas coerce), week still string."""
-    df = (
+    return typed_hhs(
         spark.read.option("header", True)
         .option("mode", "PERMISSIVE")
         .csv(path)
     )
-    # tolerate extra columns: project + cast to the declared schema
-    out_cols = []
-    for field in HHS_RAW_SCHEMA.fields:
-        if field.name in df.columns:
-            # try_cast: malformed numerics coerce to NULL (ANSI-safe)
-            out_cols.append(
-                F.col(field.name).try_cast(field.dataType).alias(field.name)
-            )
-        else:
-            out_cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-    return df.select(*out_cols)
+
+
+def typed_hhs(df: DataFrame) -> DataFrame:
+    """The declared HHS columns of a string-typed frame, in one
+    selectExpr: extra columns are dropped, a missing one reads NULL,
+    and try_cast coerces malformed numerics to NULL (ANSI-safe)."""
+    present = set(df.columns)
+    return df.selectExpr(*[
+        f"try_cast({ident(f.name) if f.name in present else 'NULL'}"
+        f" AS {f.dataType.simpleString()}) AS {ident(f.name)}"
+        for f in HHS_RAW_SCHEMA.fields
+    ])
 
 
 def read_cms_csv(spark: SparkSession, path: str) -> DataFrame:
     """CMS quality CSV: the 5 used columns, all strings
     (load_quality.py:98-99 usecols + dtype=object)."""
     df = spark.read.option("header", True).csv(path)
-    out_cols = [
-        (F.col(c) if c in df.columns else F.lit(None)).cast("string").alias(c)
+    present = set(df.columns)
+    return df.selectExpr(*[
+        f"CAST({ident(c) if c in present else 'NULL'} AS STRING) AS {ident(c)}"
         for c in CMS_RAW_COLUMNS
-    ]
-    return df.select(*out_cols)
+    ])

@@ -14,13 +14,14 @@ crash is safe because the append itself is an idempotent anti-join
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..catalog import Warehouse
+from ..functions.sqltext import literal, with_columns
 from ..ingest import LoadReport, load_hhs_frame, load_quality_frame
 from ..schemas import CMS_RAW_SCHEMA, HHS_RAW_SCHEMA
+from ..sources.csv import typed_hhs
 from .bounded import BoundedStream, run_available_now
 
 #: file-source streams require a declared schema; CSV schema matches by
@@ -49,12 +50,7 @@ def stream_load_hhs(
         .option("header", True)
         .csv(landing_dir)
     )
-    typed = stream.select(
-        *[
-            F.col(f.name).try_cast(f.dataType).alias(f.name)
-            for f in HHS_RAW_SCHEMA.fields
-        ]
-    )
+    typed = typed_hhs(stream)
 
     def process(batch_df, batch_id: int) -> None:
         reports.append(load_hhs_frame(batch_df, warehouse))
@@ -89,13 +85,10 @@ def stream_load_quality(
         .option("header", True)
         .csv(landing_dir)
     )
-    stamped = stream.withColumn(
-        "data_date",
-        F.to_date(
-            F.regexp_extract(F.input_file_name(), r"(\d{4}-\d{2}-\d{2})", 1),
-            "yyyy-MM-dd",
-        ),
-    )
+    date = literal(r"(\d{4}-\d{2}-\d{2})")
+    stamped = with_columns(stream, {
+        "data_date": f"to_date(regexp_extract(input_file_name(), {date}, 1), 'yyyy-MM-dd')"
+    })
 
     def process(batch_df, batch_id: int) -> None:
         reports.append(load_quality_frame(batch_df, warehouse))

@@ -437,6 +437,39 @@ def test_loads_and_rollup_take_counts_from_their_writes(
     assert n == 2
 
 
+def test_load_plans_build_in_few_jvm_calls(spark, hhs_csv_1, cms_csv_1, monkeypatch):
+    """Building a load's frames, from the read through the split to the
+    table projections, with no action, makes a few hundred driver->JVM
+    calls (~170 for HHS, ~150 for CMS): every step is one ``selectExpr``
+    over SQL text, where a ``Column`` per field and per rule (each one
+    records its call site) would make thousands."""
+    from health_data_transformation_spark import ingest
+    from health_data_transformation_spark.operators.cleaning import stamp_literal
+    from health_data_transformation_spark.sources.csv import read_cms_csv, read_hhs_csv
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls, me = client.send_command, [0], threading.get_ident()
+
+    def counting(*args, **kwargs):
+        calls[0] += threading.get_ident() == me
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+
+    def built(plan) -> int:
+        calls[0] = 0
+        split, _ = plan()
+        n = calls[0]
+        split.flagged.unpersist()
+        return n
+
+    hhs = built(lambda: ingest.hhs_plan(read_hhs_csv(spark, hhs_csv_1)))
+    cms = built(lambda: ingest.quality_plan(stamp_literal(
+        read_cms_csv(spark, cms_csv_1), "data_date", "2022-10-01", "date"
+    )))
+    assert hhs < 400 and cms < 300, (hhs, cms)
+
+
 def test_loads_that_add_no_rows_add_no_files(
     spark, warehouse, hhs_csv_1, cms_csv_1, tmp_path
 ):

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from health_data_transformation_spark.operators import cleaning, dedup, topk, validate
 
@@ -60,12 +61,47 @@ def test_validate_null_verdict_fails_the_rule(spark):
     # a NULL verdict outside null_passing_cols fails its rule: the row
     # is invalid (not dropped from both sides) and the rule is named
     df = spark.createDataFrame([(1, None), (2, -1.0), (3, 3.0)], "id int, v double")
-    split = validate.split_valid(df, [validate.Rule("v_pos", F.col("v") >= 0)])
+    split = validate.split_valid(df, [validate.Rule("v_pos", "v >= 0")])
     assert [r["id"] for r in split.valid.collect()] == [3]
     bad = {r["id"]: r["_failed_rules"] for r in split.invalid.collect()}
     assert bad == {1: ["v_pos"], 2: ["v_pos"]}
     assert split.counts.get == {"input_rows": 3, "invalid_rows": 2}
     split.flagged.unpersist()
+
+
+def test_rule_name_with_a_quote_is_reported_verbatim(spark):
+    df = spark.createDataFrame([(1, -1.0)], "id int, v double")
+    split = validate.split_valid(df, [validate.Rule("it's_bad", "v >= 0")])
+    assert split.invalid.collect()[0]["_failed_rules"] == ["it's_bad"]
+    split.flagged.unpersist()
+
+
+def test_odd_column_names_clean_validate_and_project(spark):
+    # names with a space and a backtick are quoted in every SQL text
+    df = spark.createDataFrame(
+        [(1, -999999.0, "a"), (2, -1.0, "b"), (3, 2.0, None)],
+        "id int, `m v` double, `x``y` string",
+    )
+    df = cleaning.replace_sentinel(df, ["m v"], -999999.0)
+    df = cleaning.map_values(df, "x`y", {"a": "it's"})
+    assert df.columns == ["id", "m v", "x`y"]
+    split = validate.split_valid(
+        df, validate.non_negative(["m v"]) + validate.not_null(["x`y"])
+    )
+    assert [tuple(r) for r in split.valid.collect()] == [(1, None, "it's")]
+    bad = {r["id"]: r["_failed_rules"] for r in split.invalid.collect()}
+    assert bad == {2: ["m v_non_negative"], 3: ["x`y_not_null"]}
+    assert split.invalid.columns == ["id", "m v", "x`y", "_failed_rules"]
+    split.flagged.unpersist()
+
+
+def test_rule_on_a_missing_column_raises_at_split(spark):
+    from pyspark.errors import AnalysisException
+
+    df = spark.createDataFrame([(1, 2.0)], "id int, v double")
+    for rules in ([validate.Rule("r", "nope >= 0")], validate.non_negative(["nope"])):
+        with pytest.raises(AnalysisException):
+            validate.split_valid(df, rules)
 
 
 def test_dedup_first_wins_deterministic(spark):

@@ -5,8 +5,11 @@ with 36, 72 and 144 weeks of history instead of its fixed 36, one fresh
 Spark process per length, and prints per-load seconds, Spark jobs and
 tasks for the timed loads, by kind (``hhs`` is a new week, ``redeliver``
 an earlier week again, ``cms`` a quality snapshot), and each table's
-parquet file count after them.  The benchmark itself is unchanged; this
-only reuses its data generator, model checks and job counter.
+parquet file count after them.  ``calls`` is the load's driver->JVM
+(py4j) calls from any thread, its file read included, and ``main`` the
+part of them made on the calling thread: the build layer's cost as a
+count.  The benchmark itself is unchanged; this only reuses its data
+generator, model checks, tracer and job counter.
 
     python tools/history_sweep.py [--weeks 36 72 144] [--ops 10] [--seed 1]
 
@@ -23,12 +26,29 @@ import os
 import shutil
 import subprocess
 import sys
+import threading
 import time
+from contextlib import contextmanager
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "perfbench"))
+
+
+def count_jvm_calls(spark) -> dict[str, int]:
+    """A live count of the driver's py4j calls from here on: ``all``
+    from any thread, ``main`` from the calling one."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, n = client.send_command, threading.get_ident(), {"all": 0, "main": 0}
+
+    def counting(*args, **kwargs):
+        n["all"] += 1
+        n["main"] += threading.get_ident() == me
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    return n
 
 
 def one(weeks: int, ops: int, seed: int) -> dict:
@@ -41,6 +61,26 @@ def one(weeks: int, ops: int, seed: int) -> dict:
     class Sweep(WeeklyLoad):
         HISTORY_WEEKS = weeks
 
+    class LoadCalls(Tracer):
+        """Also notes the JVM calls made inside each load's read and
+        load spans: one entry per load, in the order of ``ctx.loads``."""
+
+        def __init__(self, calls: dict[str, int]):
+            super().__init__(True)
+            self.calls, self.per_load, self.pending = calls, [], dict.fromkeys(calls, 0)
+
+        @contextmanager
+        def span(self, name, op=None):
+            before = dict(self.calls)
+            with super().span(name, op):
+                yield
+            if name in ("sources.csv.read", "ingest.load"):
+                for k, v in before.items():
+                    self.pending[k] += self.calls[k] - v
+            if name == "ingest.load":
+                self.per_load.append(self.pending)
+                self.pending = dict.fromkeys(self.calls, 0)
+
     run_dir = bench.new_run_dir()
     workload = Sweep(seed)
     spark = None
@@ -48,7 +88,7 @@ def one(weeks: int, ops: int, seed: int) -> dict:
         workload.prepare()
         spark, _ = bench.start_session(run_dir)
         jobs = JobCounter(spark.sparkContext.statusTracker(), bench.listener_drain(spark))
-        ctx = Context(spark, run_dir, Tracer(True), jobs)
+        ctx = Context(spark, run_dir, LoadCalls(count_jvm_calls(spark)), jobs)
         workload.setup(ctx)
         bench.settle(spark)
         jobs.take()
@@ -63,8 +103,9 @@ def one(weeks: int, ops: int, seed: int) -> dict:
             bench.stop_session(spark)
         shutil.rmtree(run_dir, ignore_errors=True)
     loads = [
-        {"kind": r.kind, "load_s": r.load_s, "jobs": r.work.jobs, "tasks": r.work.tasks}
-        for r in ctx.loads
+        {"kind": r.kind, "load_s": r.load_s, "jobs": r.work.jobs, "tasks": r.work.tasks,
+         "calls": calls["all"], "main": calls["main"]}
+        for r, calls in zip(ctx.loads, ctx.tracer.per_load)
         if r.op is not None
     ]
     return {"weeks": weeks, "loads": loads, "files": files, "problems": problems}
@@ -83,7 +124,10 @@ def main(argv=None) -> int:
         print(json.dumps(one(args.one, args.ops, args.seed)))
         return 0
 
-    print(f"{'weeks':>5} {'kind':<9} {'loads':>5} {'load_s':>7} {'jobs':>5} {'tasks':>6}")
+    print(
+        f"{'weeks':>5} {'kind':<9} {'loads':>5} {'load_s':>7} {'jobs':>5} "
+        f"{'tasks':>6} {'calls':>6} {'main':>6}"
+    )
     bad = 0
     for weeks in args.weeks:
         t0 = time.perf_counter()
@@ -101,7 +145,9 @@ def main(argv=None) -> int:
                 f"{weeks:>5} {kind:<9} {len(recs):>5} "
                 f"{median([r['load_s'] for r in recs]):>7.3f} "
                 f"{median([r['jobs'] for r in recs]):>5.1f} "
-                f"{median([r['tasks'] for r in recs]):>6.1f}"
+                f"{median([r['tasks'] for r in recs]):>6.1f} "
+                f"{median([r['calls'] for r in recs]):>6.0f} "
+                f"{median([r['main'] for r in recs]):>6.0f}"
             )
         print(f"{weeks:>5} files    {res['files']}")
         for problem in res["problems"]:
