@@ -29,7 +29,9 @@ directory).  Date filters on a partitioned table prune its leaf
 directories (``SnapshotTable.read``).  A flat table adds a commit
 directory per adding load until the manifest would list more of them
 than Spark's parallel partition discovery threshold; that append folds
-the table into one directory (``SnapshotTable.stage_append``).
+the table into one directory (``SnapshotTable.stage_append``).  Nothing
+on the load path vacuums: the directories a fold supersedes stay on
+disk until ``snapshot-vacuum`` (``SnapshotTable.vacuum``) runs.
 
 100 TB notes: the anti-join's existing side reads ONLY the key columns
 (column pruning).  A LeftAnti join gets no dynamic partition pruning,
@@ -49,7 +51,7 @@ from contextlib import contextmanager
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 
-from .functions.sqltext import with_columns
+from .functions.sqltext import ident, with_columns
 from .schemas import TABLE_KEYS, TABLE_PARTITIONS, TABLE_SCHEMAS
 from .snapshots import SnapshotTable, Staged
 
@@ -140,15 +142,9 @@ class Warehouse:
             raise RuntimeError("append_idempotent runs inside Warehouse.load()")
         keys = list(keys or TABLE_KEYS[table])
         t = self.table(table)
-        # a stored row with a batch key lives in a leaf of one of the
-        # batch's partitions only if the partition columns are among
-        # the keys: then those leaves are the whole probe
-        missing = [c for c in t.partition_by or () if c not in keys]
-        if missing:
-            raise ValueError(
-                f"partitioned append requires the partition "
-                f"column(s) {missing!r} among the keys"
-            )
+        # with the partition columns among the keys, the stored leaves
+        # of the batch's partitions are the whole probe
+        t.check_match_keys(keys)
         existing = None
         if t.current_version():
             if t.partition_by is None:
@@ -161,15 +157,13 @@ class Warehouse:
         # existing side is a no-op the optimizer cannot prove (the
         # empty frame is an RDD scan, not a LocalRelation) — skip it
         fresh = df if existing is None else df.join(
-            existing.select(*keys), keys, "left_anti"
+            existing.selectExpr(*map(ident, keys)), keys, "left_anti"
         )
         # one deterministic winner per key *within* the batch as well
         observation = Observation()
-        fresh = fresh.dropDuplicates(keys).observe(
-            observation, F.count(F.lit(1)).alias("rows")
-        )
+        fresh = fresh.dropDuplicates(keys).observe(observation, F.expr("count(1) AS rows"))
         self._staged.append(
-            t.stage_append(fresh.select(*[f.name for f in TABLE_SCHEMAS[table].fields]))
+            t.stage_append(fresh.selectExpr(*map(ident, TABLE_SCHEMAS[table].names)))
         )
         return observation.get["rows"]
 

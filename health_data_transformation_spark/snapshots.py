@@ -34,7 +34,9 @@ no rows publishes no version and leaves no directory.  An unpartitioned
 append adds one directory per commit; when the manifest would list more
 directories than ``spark.sql.sources.parallelPartitionDiscovery
 .threshold`` (past it Spark lists the paths in a job on every read),
-the append folds the table into one directory instead.
+the append folds the table into one directory instead.  The
+directories a fold supersedes stay on disk (older versions still read
+them) until ``vacuum`` removes them.
 
 Scale notes: ``commit_append`` touches only the new files (O(batch)).
 On an UNPARTITIONED table ``commit_upsert``/``commit_delete`` rewrite
@@ -42,25 +44,27 @@ the full table.  With ``partition_by`` (VERDICT r10 missing #1) the
 manifest additionally maps partition value -> data directories, and
 upsert/delete rewrite ONLY partitions containing matches — untouched
 partitions' directories are REUSED verbatim in the new manifest.  Cost
-shape, stated precisely (ADVICE r11): the REWRITE — new bytes written
-and survivor re-land — is O(touched partitions); match DISCOVERY for
-``commit_delete`` is still one predicate scan over the full table
-(same as Delta without data-skipping stats), though since every leaf
-holds a single partition value, partition-pruned predicates and the
-survivor rewrite scan do prune at file level.  Partitioned commits duplicate the partition column into
-the path key (``_pt``) so every data file keeps the full row schema:
-manifests can then list LEAF directories from different commits side
-by side.  Partition keys are checked by an observation on the write
-itself (no probe job): a bad key removes the written directory and
-raises before anything is published.  ``vacuum`` collects at leaf
-granularity: a commit directory whose partitions are partially
-reused by retained versions loses only its unreferenced leaves.
-Readers never list the table root: ``read`` hands Spark the manifest's
-data directories and Spark lists only those, so planning cost is
-O(directories + files in the snapshot), not O(everything under root);
-``read(partitions=...)`` hands it only the leaves of the named
-partitions (the upsert survivor scan and the catalog's append probe),
-so their planning cost does not grow with the table's history.
+shape, stated precisely (ADVICE r11): an upsert's touched partitions
+are its batch's own; a delete finds its touched partitions with one
+predicate scan over the full table (same as Delta without
+data-skipping stats).  Both then read the rows that survive with
+``read(v - 1, partitions=touched)``, which hands Spark only the
+touched leaves, so the REWRITE — survivor scan, new bytes written —
+is O(touched partitions).  Partitioned commits duplicate the
+partition column into the path key (``_pt``) so every data file keeps
+the full row schema: manifests can then list LEAF directories from
+different commits side by side.  Partition keys are checked in one
+place, by an observation on the partitioned write itself (no probe
+job): a bad key removes the written directory and raises before
+anything is published.  ``vacuum`` collects at leaf granularity: a
+commit directory whose partitions are partially reused by retained
+versions loses only its unreferenced leaves.  Readers never list the
+table root: ``read`` hands Spark the manifest's data directories and
+Spark lists only those, so planning cost is O(directories + files in
+the snapshot), not O(everything under root); ``read(partitions=...)``
+hands it only the leaves of the named partitions (the rewrites above
+and the catalog's append probe), so their planning cost does not grow
+with the table's history.
 Every commit directory is named as a hive level (``_commit=<id>``), so
 on a partitioned table Spark's partition discovery below ``data/``
 reads the partition columns from the leaf paths and a filter on them
@@ -70,9 +74,7 @@ prunes leaves before any file is opened.  The table's directory and
 
 from __future__ import annotations
 
-import functools
 import json
-import operator
 import os
 import shutil
 import uuid
@@ -83,7 +85,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
-from .functions.sqltext import ident
+from .functions.sqltext import ident, with_columns
 
 
 class SnapshotConflict(RuntimeError):
@@ -345,22 +347,15 @@ class SnapshotTable:
                             changed_dirs, self._table_schema(cur)
                         ):
                             raise  # winner's new rows match our predicate
-                w_schema = self._table_schema(cur)
+                schema = self._table_schema(cur)
                 if batch_schema is not None:
-                    if (
-                        not merge_schema
-                        and w_schema is not None
-                        and set(f.name for f in batch_schema.fields)
-                        != set(f.name for f in w_schema.fields)
-                    ):
+                    if not merge_schema and set(batch_schema.names) != set(schema.names):
                         raise SchemaEvolutionError(
                             "batch columns differ from the winning "
                             "commit's schema; pass merge_schema=True "
                             "to evolve additively"
                         )
-                    schema = self._evolve_schema(w_schema, batch_schema)
-                elif w_schema is not None:
-                    schema = w_schema
+                    schema = self._evolve_schema(schema, batch_schema)
                 v = cur + 1
 
     # -- commits -------------------------------------------------------------
@@ -419,8 +414,11 @@ class SnapshotTable:
         while ``read`` takes the column from the path so that filters
         on it prune leaves.
 
-        Bad partition keys are counted by an observation on the write
-        itself, so checking them costs no job of its own: NULL and
+        Every partitioned commit writes through here, and this is the
+        one place partition keys are checked: their types
+        (``_check_partition_types``) before the write, and bad values
+        by an observation on the write itself, so checking them costs
+        no job of its own: NULL and
         empty-string values (Spark writes both as Hive's default
         partition) and, on multi-column tables, values containing
         ``/`` (the manifest key separator; a single-level key is never
@@ -431,22 +429,17 @@ class SnapshotTable:
 
         pcols = self._pcols
         self._check_partition_types(df.schema)
-
-        def bad(c):
-            cond = F.col(c).isNull() | (F.col(c).cast("string") == "")
-            if len(pcols) > 1:
-                cond = cond | F.col(c).cast("string").contains("/")
-            return cond
-
+        checks = ["{c} IS NULL", "CAST({c} AS STRING) = ''"]
+        if len(pcols) > 1:
+            checks.append("contains(CAST({c} AS STRING), '/')")
+        bad = " OR ".join(check.format(c=ident(c)) for c in pcols for check in checks)
         observation = Observation()
         path_keys = self._path_keys()
         d = self._new_data_dir(version, tag)
         self._write(
-            df.observe(
-                observation,
-                F.count_if(functools.reduce(operator.or_, map(bad, pcols)))
-                .alias("bad"),
-            ).withColumns({pk: F.col(c) for pk, c in zip(path_keys, pcols)}),
+            with_columns(
+                df, {pk: ident(c) for pk, c in zip(path_keys, pcols)}
+            ).observe(observation, F.expr(f"count_if({bad}) AS bad")),
             d,
             path_keys,
         )
@@ -523,16 +516,11 @@ class SnapshotTable:
         return [d for dirs in partitions.values() for d in dirs]
 
     def _table_schema(self, version: int) -> StructType | None:
-        """Schema recorded at ``version`` (None for pre-evolution
-        manifests, which read with footer inference)."""
+        """Schema recorded at ``version`` (None for version 0: every
+        commit records its schema)."""
         if version < 1:
             return None
-        m = self._read_manifest(version)
-        return (
-            StructType.fromJson(json.loads(m["schema"]))
-            if "schema" in m
-            else None
-        )
+        return StructType.fromJson(json.loads(self._read_manifest(version)["schema"]))
 
     def _evolve_schema(
         self, current: StructType | None, batch: StructType
@@ -604,7 +592,7 @@ class SnapshotTable:
             )
         observation = Observation()
         new_dir = self._write_data(
-            df.observe(observation, F.count(F.lit(1)).alias("rows")), v, "append"
+            df.observe(observation, F.expr("count(1) AS rows")), v, "append"
         )
         if not observation.get["rows"]:
             # Spark still writes a schema-only part file
@@ -676,25 +664,12 @@ class SnapshotTable:
     def _touched_partitions(self, frame: DataFrame) -> list[tuple]:
         """Distinct partition-value TUPLES in ``frame`` — the bounded
         driver-side list (O(partitions touched), never O(rows)) that
-        scopes a rewrite."""
-        pcols = self._pcols
-        self._check_partition_types(frame.schema)
-        multi = len(pcols) > 1
-        tuples = [
-            tuple(r) for r in frame.select(*pcols).distinct().collect()
+        scopes a rewrite.  Nothing is checked here: a bad key names no
+        stored leaf, and the commit's write rejects it."""
+        return [
+            tuple(r)
+            for r in frame.selectExpr(*map(ident, self._pcols)).distinct().collect()
         ]
-        if any(
-            v is None or str(v) == "" or (multi and "/" in str(v))
-            for t in tuples
-            for v in t
-        ):
-            raise ValueError(
-                f"NULL, empty-string, or (multi-column) '/'-containing "
-                f"values in partition columns {pcols!r} — "
-                "partition-scoped commits require non-null, non-empty "
-                "keys (separator-free on multi-column tables)"
-            )
-        return tuples
 
     @staticmethod
     def _key_of(t: tuple) -> str:
@@ -703,26 +678,21 @@ class SnapshotTable:
         key, so pre-multi-column manifests stay readable."""
         return "/".join(str(v) for v in t)
 
-    def _touched_filter(self, tuples: list[tuple]):
-        """Pushdown-friendly membership predicate for the touched
-        partitions: single column compiles to ``col IN (...)``, multi
-        column to OR-of-ANDs of literal equalities — both reach the
-        parquet scan as PushedFilters, so the survivor-rewrite scan
-        prunes untouched leaves at file level (each leaf holds one
-        partition tuple)."""
-        pcols = self._pcols
-        if len(pcols) == 1:
-            return F.col(pcols[0]).isin([t[0] for t in tuples])
-        return functools.reduce(
-            operator.or_,
-            (
-                functools.reduce(
-                    operator.and_,
-                    (F.col(c) == v for c, v in zip(pcols, t)),
-                )
-                for t in tuples
-            ),
-        )
+    def check_match_keys(self, keys: Sequence[str]) -> None:
+        """A partition-scoped commit that matches rows by ``keys``
+        (``commit_upsert``, ``catalog.Warehouse.append_idempotent``)
+        looks for a key's stored row only in the batch's partitions.
+        That is exact only if every partition column is among the keys;
+        otherwise a key could change partitions and its old row, in an
+        untouched leaf, would survive as a duplicate.  Raises
+        ValueError on a partitioned table whose columns are not all
+        among ``keys``, on the first commit too."""
+        missing = [c for c in self._pcols or () if c not in keys]
+        if missing:
+            raise ValueError(
+                f"partitioned commits require the partition "
+                f"column(s) {missing!r} among the match keys"
+            )
 
     def commit_upsert(self, df: DataFrame, keys: Sequence[str]) -> int:
         """MERGE: batch rows replace same-key rows, others survive.
@@ -732,23 +702,10 @@ class SnapshotTable:
         the batch as the new snapshot.  On a partitioned table ONLY
         partitions containing batch rows rewrite; untouched partitions'
         directories carry over into the new manifest verbatim — which
-        requires ``partition_by`` to be among ``keys`` (otherwise a
-        key could change partitions and its old row, living in an
-        untouched partition, would silently survive as a duplicate).
+        requires ``partition_by`` to be among ``keys``
+        (``check_match_keys``).
         """
-        # ADVICE r11 #3: the partition-column-in-keys contract must hold
-        # on the FIRST commit too — the old v==1 short-circuit skipped
-        # it, so an initial upsert with bad keys succeeded silently and
-        # the identical second call raised.  Multi-column tables
-        # require EVERY level among the keys (a key changing any level
-        # would survive as a duplicate in an untouched leaf).
-        if self.partition_by is not None:
-            missing = [c for c in self._pcols if c not in keys]
-            if missing:
-                raise ValueError(
-                    f"partitioned upsert requires the partition "
-                    f"column(s) {missing!r} among the match keys"
-                )
+        self.check_match_keys(keys)
         v = self.current_version() + 1
         if v == 1:
             return self.commit_overwrite(df)
@@ -845,8 +802,8 @@ class SnapshotTable:
 
         def rewrite(f: DataFrame) -> DataFrame:
             """Survivors of ``f``, counting rows in and out."""
-            return keep(f.observe(seen, F.count(F.lit(1)).alias("n"))).observe(
-                kept, F.count(F.lit(1)).alias("n")
+            return keep(f.observe(seen, F.expr("count(1) AS n"))).observe(
+                kept, F.expr("count(1) AS n")
             )
 
         def deleted() -> dict:
@@ -860,8 +817,7 @@ class SnapshotTable:
             if touched:
                 touched_keys = {self._key_of(t) for t in touched}
                 new_map = self._write_data_partitioned(
-                    rewrite(current.filter(self._touched_filter(touched))),
-                    v, "delete",
+                    rewrite(self.read(v - 1, partitions=touched)), v, "delete"
                 )
                 extra = deleted()
 
@@ -870,21 +826,15 @@ class SnapshotTable:
                 # ONLY the winner's changed directories for predicate
                 # matches (pushdown + limit(1) — early exit on the
                 # first hit)
-                reader = self.spark.read
-                if tbl_schema is not None:
-                    reader = reader.schema(tbl_schema)
+                reader = self.spark.read.schema(tbl_schema)
                 return hits(reader.parquet(*dirs)).limit(1).count() > 0
 
             return self._publish_scoped(
-                v, "delete", schema if schema else current.schema,
-                new_map, touched_keys, None, blind=False,
+                v, "delete", schema, new_map, touched_keys, None, blind=False,
                 read_scope_matches=_matches_in, extra=extra,
             )
         new_dir = self._write_data(rewrite(current), v, "delete")
-        return self._publish(
-            v, [new_dir], "delete", schema if schema else current.schema,
-            extra=deleted(),
-        )
+        return self._publish(v, [new_dir], "delete", schema, extra=deleted())
 
     # -- maintenance ---------------------------------------------------------
 
@@ -923,13 +873,10 @@ class SnapshotTable:
             )
             parts = {k: [d] for k, d in new_map.items()}
             return self._publish(
-                v, self._flatten(parts), "compact",
-                schema if schema else cur.schema, partitions=parts,
+                v, self._flatten(parts), "compact", schema, partitions=parts
             )
         new_dir = self._write_data(cur.repartition(n_files), v, "compact")
-        return self._publish(
-            v, [new_dir], "compact", schema if schema else cur.schema
-        )
+        return self._publish(v, [new_dir], "compact", schema)
 
     def vacuum(self, retain_last: int = 1) -> list[str]:
         """Garbage-collect data directories unreachable from the last
@@ -1023,22 +970,20 @@ class SnapshotTable:
                 return self.spark.createDataFrame(
                     self.spark.sparkContext.emptyRDD(), schema
                 )
-        reader = self.spark.read
+        # explicit log schema: files missing evolved columns read them
+        # as NULL, and planning never touches file footers (a path key
+        # takes its partition column's type)
         path_cols = dict(zip(self._pcols, self._path_keys())) if self._pcols else {}
+        extra = [StructField("_commit", StringType())] * bool(path_cols)
+        extra += [StructField(pk, schema[c].dataType) for c, pk in path_cols.items()]
+        reader = self.spark.read.schema(StructType(schema.fields + extra))
         if path_cols:
             # data/_commit=<id>/_pt=<value>/: discovery below data/
             # yields _commit and the path keys as partition columns
             reader = reader.option("basePath", os.path.join(self.root, "data"))
-        if schema is not None:
-            # explicit log schema: files missing evolved columns read
-            # them as NULL, and planning never touches file footers
-            # (a path key takes its partition column's type)
-            extra = [StructField("_commit", StringType())] * bool(path_cols)
-            extra += [StructField(pk, schema[c].dataType) for c, pk in path_cols.items()]
-            reader = reader.schema(StructType(schema.fields + extra))
         df = reader.parquet(*dirs)
         if not path_cols:
             return df
         # one selectExpr: a Column per field costs a JVM call each
-        keep = [c for c in (schema or df.schema).names if c != "_commit" and c not in path_cols.values()]
+        keep = [c for c in schema.names if c != "_commit" and c not in path_cols.values()]
         return df.selectExpr(*[f"{ident(path_cols.get(c, c))} AS {ident(c)}" for c in keep])

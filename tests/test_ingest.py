@@ -437,6 +437,20 @@ def test_loads_and_rollup_take_counts_from_their_writes(
     assert n == 2
 
 
+def count_main_jvm_calls(spark, monkeypatch) -> list[int]:
+    """A live count, in ``[0]``, of the driver->JVM (py4j) calls the
+    calling thread makes from here on."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls, me = client.send_command, [0], threading.get_ident()
+
+    def counting(*args, **kwargs):
+        calls[0] += threading.get_ident() == me
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    return calls
+
+
 def test_load_plans_build_in_few_jvm_calls(spark, hhs_csv_1, cms_csv_1, monkeypatch):
     """Building a load's frames, from the read through the split to the
     table projections, with no action, makes a few hundred driver->JVM
@@ -447,14 +461,7 @@ def test_load_plans_build_in_few_jvm_calls(spark, hhs_csv_1, cms_csv_1, monkeypa
     from health_data_transformation_spark.operators.cleaning import stamp_literal
     from health_data_transformation_spark.sources.csv import read_cms_csv, read_hhs_csv
 
-    client = spark.sparkContext._gateway._gateway_client
-    send, calls, me = client.send_command, [0], threading.get_ident()
-
-    def counting(*args, **kwargs):
-        calls[0] += threading.get_ident() == me
-        return send(*args, **kwargs)
-
-    monkeypatch.setattr(client, "send_command", counting)
+    calls = count_main_jvm_calls(spark, monkeypatch)
 
     def built(plan) -> int:
         calls[0] = 0
@@ -537,22 +544,23 @@ def load_history(spark, warehouse, tmp_path, weeks=HISTORY_WEEKS):
 
 
 class ParquetReads:
-    """Spy on the paths every ``spark.read...parquet`` call hands Spark."""
+    """Spy on the paths every ``spark.read...parquet`` call hands Spark,
+    one tuple per call in ``calls``."""
 
     def __init__(self, monkeypatch):
         from pyspark.sql.readwriter import DataFrameReader
 
-        self.paths: list[str] = []
+        self.calls: list[tuple[str, ...]] = []
         read = DataFrameReader.parquet
 
         def spy(reader, *paths, **kwargs):
-            self.paths.extend(paths)
+            self.calls.append(paths)
             return read(reader, *paths, **kwargs)
 
         monkeypatch.setattr(DataFrameReader, "parquet", spy)
 
     def under(self, root: str) -> list[str]:
-        return [p for p in self.paths if p.startswith(root + os.sep)]
+        return [p for c in self.calls for p in c if p.startswith(root + os.sep)]
 
 
 def stage_task_counts(spark, run) -> list[int]:
@@ -650,5 +658,84 @@ def test_null_partition_key_raises_and_leaves_no_dir(spark, warehouse, tmp_path)
     with pytest.raises(ValueError, match="NULL"):
         with warehouse.load():
             warehouse.append_idempotent(bad, "hospital_bed_information")
+    assert beds.current_version() == version
+    assert unpublished_commits(warehouse, "hospital_bed_information") == set()
+
+
+def test_partitioned_appends_make_few_jvm_calls(spark, warehouse, tmp_path, monkeypatch):
+    """A partitioned ``append_idempotent`` inside ``Warehouse.load()``
+    makes a bounded number of main-thread driver->JVM calls, its jobs
+    included, for a new week (no probe) and for a re-delivered week
+    (a probe of its stored leaf): its projections and observations are
+    SQL text, and its partition keys are checked once, on the write."""
+    from tests.conftest import write_lines
+
+    from health_data_transformation_spark import ingest
+    from health_data_transformation_spark.sources.csv import read_hhs_csv
+
+    stored = HISTORY_WEEKS[:2]
+    load_history(spark, warehouse, tmp_path, weeks=stored)
+    calls = count_main_jvm_calls(spark, monkeypatch)
+
+    def append_beds(name, rows) -> tuple[int, int]:
+        raw = read_hhs_csv(spark, write_lines(str(tmp_path / name), hhs_rows(rows)))
+        split, tables = ingest.hhs_plan(raw)
+        with warehouse.load():
+            calls[0] = 0
+            added = warehouse.append_idempotent(
+                tables["hospital_bed_information"], "hospital_bed_information"
+            )
+            made = calls[0]
+        split.flagged.unpersist()
+        return added, made
+
+    new_week = HISTORY_WEEKS[-1] + dt.timedelta(weeks=1)
+    added, new = append_beds("new_week.csv", [("H1", new_week, 1), ("H2", new_week, 2)])
+    assert added == 2
+    added, again = append_beds("again.csv", [(pk, stored[1], 100) for pk in ("H1", "H2")])
+    assert added == 0
+    assert new < 150 and again < 200, (new, again)
+
+
+def test_partitioned_delete_rewrite_reads_only_touched_leaves(
+    spark, warehouse, tmp_path, monkeypatch
+):
+    """A key-frame delete on the bed table finds its matches with one
+    scan of the table, then hands Spark only the leaves of the weeks
+    that hold them for the rewrite."""
+    load_history(spark, warehouse, tmp_path, weeks=HISTORY_WEEKS[:4])
+    beds = warehouse.table("hospital_bed_information")
+    before = beds.manifest(beds.current_version())
+    week = HISTORY_WEEKS[2]
+    keys = spark.createDataFrame([("H1", week)], "hospital_fk string, collection_week date")
+    reads = ParquetReads(monkeypatch)
+    assert warehouse.delete_keys(
+        "hospital_bed_information", keys, ["hospital_fk", "collection_week"]
+    ) == 1
+    monkeypatch.undo()
+    scan, *rewrite = reads.calls
+    assert sorted(scan) == sorted(before["dirs"])
+    assert rewrite == [tuple(before["partitions"][str(week)])]
+    after = {
+        (r.hospital_fk, r.collection_week)
+        for r in warehouse.read("hospital_bed_information").collect()
+    }
+    assert after == {(pk, w) for w in HISTORY_WEEKS[:4] for pk in ("H1", "H2")} - {("H1", week)}
+
+
+def test_partitioned_append_requires_partition_columns_among_keys(
+    spark, warehouse, tmp_path
+):
+    """An append whose keys omit the bed table's partition column
+    raises ValueError and publishes nothing."""
+    import pytest
+
+    load_history(spark, warehouse, tmp_path, weeks=HISTORY_WEEKS[:2])
+    beds = warehouse.table("hospital_bed_information")
+    version = beds.current_version()
+    batch = warehouse.read("hospital_bed_information")
+    with pytest.raises(ValueError, match="partition column.*among the match keys"):
+        with warehouse.load():
+            warehouse.append_idempotent(batch, "hospital_bed_information", keys=["hospital_fk"])
     assert beds.current_version() == version
     assert unpublished_commits(warehouse, "hospital_bed_information") == set()

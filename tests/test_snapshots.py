@@ -1013,10 +1013,10 @@ def test_partition_key_roundtrip_through_hive_path(spark, tmp_path):
 
 def test_partitioned_upsert_and_delete_still_reject_bad_keys(spark, tmp_path):
     """r13: the pre-write bad-key probe was removed from the
-    upsert/delete rewrite paths (their partition-value domain is
-    already validated by _touched_partitions) — the rejection contract
-    must hold unchanged: bad keys in an upsert batch fail BEFORE any
-    write, and no orphan data directory is burned."""
+    upsert/delete rewrite paths (the partitioned write's own
+    observation rejects bad keys) — the rejection contract must hold
+    unchanged: bad keys in an upsert batch leave nothing published, no
+    directory left."""
     t = _pt_table(spark, str(tmp_path / "t"))
     data_root = os.path.join(str(tmp_path / "t"), "data")
     dirs_before = sorted(os.listdir(data_root))
@@ -1035,3 +1035,34 @@ def test_partitioned_upsert_and_delete_still_reject_bad_keys(spark, tmp_path):
     v = t.commit_delete("k = 12345")
     assert v == 2
     assert sorted(os.listdir(data_root)) == dirs_before
+
+
+def test_flat_appends_past_the_listing_threshold_fold(spark, tmp_path):
+    """An unpartitioned append that would make the manifest list more
+    directories than Spark's parallel partition discovery threshold
+    folds the table into one new directory holding the same rows; a
+    pre-fold version still reads, and ``vacuum(retain_last=1)`` then
+    removes the directories the fold superseded."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        t = SnapshotTable(spark, str(tmp_path / "t"))
+        batches = [[(k, f"v{k}")] for k in range(3)]
+        for batch in batches:
+            t.commit_append(spark.createDataFrame(batch, "k int, v string"))
+        pre, folded = t.manifest(2)["dirs"], t.manifest(3)["dirs"]
+        assert len(pre) == 2 and len(folded) == 1 and "-fold-" in folded[0]
+        assert rows(t.read()) == sorted(r for b in batches for r in b)
+        assert rows(t.read(version=2)) == sorted(batches[0] + batches[1])
+        data_root = os.path.join(str(tmp_path / "t"), "data")
+        assert sorted(os.listdir(data_root)) == sorted(
+            os.path.basename(d) for d in pre + folded
+        )
+        assert sorted(t.vacuum(retain_last=1)) == sorted(pre)
+        assert os.listdir(data_root) == [os.path.basename(folded[0])]
+        assert rows(t.read()) == sorted(r for b in batches for r in b)
+        with pytest.raises(ValueError, match="retention horizon"):
+            t.read(version=2)
+    finally:
+        spark.conf.set(key, prev)

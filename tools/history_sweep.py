@@ -8,7 +8,10 @@ an earlier week again, ``cms`` a quality snapshot), and each table's
 parquet file count after them.  ``calls`` is the load's driver->JVM
 (py4j) calls from any thread, its file read included, and ``main`` the
 part of them made on the calling thread: the build layer's cost as a
-count.  The benchmark itself is unchanged; this only reuses its data
+count.  Under each kind's row, ``top`` names the five package
+functions that made the most of a load's ``main`` calls (median per
+load; a call is charged to the innermost engine frame on its stack).
+The benchmark itself is unchanged; this only reuses its data
 generator, model checks, tracer and job counter.
 
     python tools/history_sweep.py [--weeks 36 72 144] [--ops 10] [--seed 1]
@@ -28,27 +31,46 @@ import subprocess
 import sys
 import threading
 import time
+from collections import Counter
 from contextlib import contextmanager
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+PACKAGE = str(REPO / "health_data_transformation_spark") + os.sep
 sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "perfbench"))
 
 
-def count_jvm_calls(spark) -> dict[str, int]:
+def package_frame() -> str | None:
+    """``<module file>:<function>`` of the innermost engine frame on the
+    calling thread's stack, or None outside the engine."""
+    f = sys._getframe(2)
+    while f is not None:
+        if f.f_code.co_filename.startswith(PACKAGE):
+            return f"{os.path.basename(f.f_code.co_filename)}:{f.f_code.co_name}"
+        f = f.f_back
+    return None
+
+
+def count_jvm_calls(spark) -> tuple[dict[str, int], Counter]:
     """A live count of the driver's py4j calls from here on: ``all``
-    from any thread, ``main`` from the calling one."""
+    from any thread, ``main`` from the calling one; and the calling
+    thread's calls by the engine function that made them."""
     client = spark.sparkContext._gateway._gateway_client
     send, me, n = client.send_command, threading.get_ident(), {"all": 0, "main": 0}
+    by_fn: Counter = Counter()
 
     def counting(*args, **kwargs):
         n["all"] += 1
-        n["main"] += threading.get_ident() == me
+        if threading.get_ident() == me:
+            n["main"] += 1
+            fn = package_frame()
+            if fn is not None:
+                by_fn[fn] += 1
         return send(*args, **kwargs)
 
     client.send_command = counting
-    return n
+    return n, by_fn
 
 
 def one(weeks: int, ops: int, seed: int) -> dict:
@@ -65,21 +87,23 @@ def one(weeks: int, ops: int, seed: int) -> dict:
         """Also notes the JVM calls made inside each load's read and
         load spans: one entry per load, in the order of ``ctx.loads``."""
 
-        def __init__(self, calls: dict[str, int]):
+        def __init__(self, calls: dict[str, int], by_fn: Counter):
             super().__init__(True)
-            self.calls, self.per_load, self.pending = calls, [], dict.fromkeys(calls, 0)
+            self.calls, self.by_fn, self.per_load = calls, by_fn, []
+            self.pending, self.pending_fn = dict.fromkeys(calls, 0), Counter()
 
         @contextmanager
         def span(self, name, op=None):
-            before = dict(self.calls)
+            before, before_fn = dict(self.calls), Counter(self.by_fn)
             with super().span(name, op):
                 yield
             if name in ("sources.csv.read", "ingest.load"):
                 for k, v in before.items():
                     self.pending[k] += self.calls[k] - v
+                self.pending_fn.update(self.by_fn - before_fn)
             if name == "ingest.load":
-                self.per_load.append(self.pending)
-                self.pending = dict.fromkeys(self.calls, 0)
+                self.per_load.append({**self.pending, "by_fn": dict(self.pending_fn)})
+                self.pending, self.pending_fn = dict.fromkeys(self.calls, 0), Counter()
 
     run_dir = bench.new_run_dir()
     workload = Sweep(seed)
@@ -88,7 +112,7 @@ def one(weeks: int, ops: int, seed: int) -> dict:
         workload.prepare()
         spark, _ = bench.start_session(run_dir)
         jobs = JobCounter(spark.sparkContext.statusTracker(), bench.listener_drain(spark))
-        ctx = Context(spark, run_dir, LoadCalls(count_jvm_calls(spark)), jobs)
+        ctx = Context(spark, run_dir, LoadCalls(*count_jvm_calls(spark)), jobs)
         workload.setup(ctx)
         bench.settle(spark)
         jobs.take()
@@ -104,7 +128,7 @@ def one(weeks: int, ops: int, seed: int) -> dict:
         shutil.rmtree(run_dir, ignore_errors=True)
     loads = [
         {"kind": r.kind, "load_s": r.load_s, "jobs": r.work.jobs, "tasks": r.work.tasks,
-         "calls": calls["all"], "main": calls["main"]}
+         "calls": calls["all"], "main": calls["main"], "by_fn": calls["by_fn"]}
         for r, calls in zip(ctx.loads, ctx.tracer.per_load)
         if r.op is not None
     ]
@@ -149,6 +173,12 @@ def main(argv=None) -> int:
                 f"{median([r['calls'] for r in recs]):>6.0f} "
                 f"{median([r['main'] for r in recs]):>6.0f}"
             )
+            fns = {fn for r in recs for fn in r["by_fn"]}
+            top = sorted(
+                ((median([r["by_fn"].get(fn, 0) for r in recs]), fn) for fn in fns),
+                key=lambda t: (-t[0], t[1]),
+            )[:5]
+            print(f"{'':>5} {'':<9} top " + ", ".join(f"{fn} {n:.0f}" for n, fn in top))
         print(f"{weeks:>5} files    {res['files']}")
         for problem in res["problems"]:
             print(f"{weeks:>5} PROBLEM {problem}")
